@@ -12,6 +12,10 @@ import graft.sql.GraftExtensions
   *  - UTC + ANSI-off for BigQuery SAFE-parse parity (BASELINE.md)
   *  - GraftExtensions injected so st_distance/regexp_contains/
   *    dot_product etc. work in SQL from the first query
+  *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
+  *    local file system with permissions set through java.nio instead
+  *    of a forked `chmod` per directory, part file and `.crc` (no
+  *    libhadoop in a Spark distribution)
   */
 object GraftSession {
 
@@ -30,6 +34,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

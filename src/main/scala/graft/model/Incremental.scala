@@ -1,8 +1,10 @@
 package graft.model
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.IO
 
 /** The two dbt materializations beyond view/table that a dbt user
   * relies on daily: `incremental` (merge-by-key upsert) and `snapshot`
@@ -17,15 +19,26 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
+  /** Stage `df` at `<path>__tmp`, then replace `path` with it. The
+    * live table is deleted only after the new one is fully written, and
+    * a refused rename fails loudly: the new table is left at the staged
+    * path rather than silently lost. */
   private def swapWrite(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val tmp = path + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new Path(path + "__tmp")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-    spark.read.parquet(path)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(
+        s"swap-write could not rename $tmp to $dst; the new table is at $tmp")
+    IO.readParquet(spark, path)
+  }
+
+  /** Whether `path` exists on its own file system. */
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
   /** dbt incremental with merge semantics: rows in `batch` replace
@@ -55,11 +68,9 @@ object Incremental {
     require(Set("ignore", "fail", "append_new_columns",
         "sync_all_columns").contains(onSchemaChange),
       s"unsupported on_schema_change '$onSchemaChange'")
-    val exists = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+    val exists = pathExists(spark, path)
     val merged = if (!exists) batch else {
-      val existing = spark.read.parquet(path)
+      val existing = IO.readParquet(spark, path)
       require(uniqueKey.forall(batch.columns.contains) &&
           uniqueKey.forall(existing.columns.contains),
         s"unique_key $uniqueKey must survive the schema change")
@@ -102,7 +113,7 @@ object Incremental {
     * swap-write instead. */
   private[graft] def appendFold(spark: SparkSession, batch: DataFrame,
       path: String, onSchemaChange: String): DataFrame = {
-    val existing = spark.read.parquet(path)
+    val existing = IO.readParquet(spark, path)
     val (keepExisting, keepBatch) =
       resolveSchemaChange(existing, batch, onSchemaChange, path)
     swapWrite(spark,
@@ -127,9 +138,7 @@ object Incremental {
   def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
       uniqueKey: Seq[String], opCol: String = "op",
       seqCol: String = "seq"): DataFrame = {
-    val exists = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+    val exists = pathExists(spark, path)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(uniqueKey.map(col): _*)
       .orderBy(col(seqCol).desc, col(opCol))
@@ -138,7 +147,7 @@ object Incremental {
     val upserts = latest.filter(col(opCol) =!= "D")
       .drop(opCol, seqCol)
     val next = if (!exists) upserts else {
-      val existing = spark.read.parquet(path)
+      val existing = IO.readParquet(spark, path)
       existing.join(latest.select(uniqueKey.map(col): _*).distinct(),
           uniqueKey, "left_anti")
         .unionByName(upserts)
@@ -157,22 +166,26 @@ object Incremental {
     * the delete (same determinism rule as applyChanges's op
     * tie-break). Read the live table through [[readCdcTable]].
     *
-    * Scale shape: identical to applyChanges — per-key window over the
-    * BATCH only, then one per-key max-seq resolution between base and
-    * batch winners (a union + batch-sized-keys window would shuffle
-    * the whole base; instead the base anti-joins the batch's key set
-    * and only the TOUCHED keys join seq-to-seq). Tombstones are
-    * bounded by the deleted-key count; [[compactGuarded]] drops the
-    * ones older than the feed's replay horizon. */
+    * Scale shape: per-key window over the BATCH only, then ONE
+    * full-outer join of the base with the batch winners on the key —
+    * both sides are unique per key, so resolution is a two-row
+    * comparison and the base is scanned once. Tombstones are bounded
+    * by the deleted-key count; [[compactGuarded]] drops the ones older
+    * than the feed's replay horizon.
+    *
+    * Jobs: only the swap-write's — on an existing table AQE runs the
+    * batch's exchange (shared by the window and the key join), the
+    * base's exchange and the write as three jobs. No job resolves a
+    * schema: the base read and the swap-write's re-read take theirs
+    * from a footer on the driver ([[graft.sources.IO.readParquet]]),
+    * where a schema-less `spark.read.parquet` would add one job each. */
   def applyChangesGuarded(spark: SparkSession, changes: DataFrame,
       path: String, uniqueKey: Seq[String], opCol: String = "op",
       seqCol: String = "seq"): DataFrame = {
     require(!changes.columns.contains("__seq") &&
         !changes.columns.contains("__deleted"),
       "__seq/__deleted are reserved bookkeeping columns of the guarded fold")
-    val exists = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+    val exists = pathExists(spark, path)
     val w = Window.partitionBy(uniqueKey.map(col): _*)
       .orderBy(col(seqCol).desc, col(opCol))
     val incoming = changes.withColumn("__rn", row_number().over(w))
@@ -181,7 +194,7 @@ object Incremental {
       .drop(opCol)
       .withColumnRenamed(seqCol, "__seq")
     val next = if (!exists) incoming else {
-      val existing = spark.read.parquet(path)
+      val existing = IO.readParquet(spark, path)
       // ONE full-outer join replaces the anti-join + semi-join +
       // union + table-wide window of the previous shape (r19, §2.4):
       // base and batch winner are both UNIQUE per key, so resolution
@@ -212,9 +225,10 @@ object Incremental {
   }
 
   /** Live view of an [[applyChangesGuarded]] table: tombstones and the
-    * bookkeeping columns stripped. */
+    * bookkeeping columns stripped. Submits no job: the schema comes
+    * from a footer on the driver ([[graft.sources.IO.readParquet]]). */
   def readCdcTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).filter(!col("__deleted"))
+    IO.readParquet(spark, path).filter(!col("__deleted"))
       .drop("__seq", "__deleted")
 
   /** Tombstone compaction for an [[applyChangesGuarded]] table: drop
@@ -233,13 +247,13 @@ object Incremental {
     * Scale shape: one filtered rewrite of the table through the staged
     * swap (`__tmp` write first, then delete+rename — the original
     * survives until the rewrite has fully succeeded). No shuffle at
-    * all: the filter is partition-local.
+    * all: the filter is partition-local, so the write is the only job.
     *
     * @return the compacted on-disk table (bookkeeping columns
     *   included, so callers can audit what was kept) */
   def compactGuarded(spark: SparkSession, path: String,
       horizonSeq: Long): DataFrame = {
-    val t = spark.read.parquet(path)
+    val t = IO.readParquet(spark, path)
     swapWrite(spark, t.filter(!col("__deleted") ||
       col("__seq") > lit(horizonSeq)), path)
   }
@@ -267,7 +281,7 @@ object Incremental {
       .mode("overwrite")
       .partitionBy(partitionCol)
       .parquet(path)
-    spark.read.parquet(path)
+    IO.readParquet(spark, path)
   }
 
   /** The null-safe value hash shared by [[snapshot]] and
@@ -342,9 +356,7 @@ object Incremental {
       uniqueKey: Seq[String], asOf: java.sql.Timestamp,
       checkCols: Seq[String] = Seq.empty,
       invalidateHardDeletes: Boolean = true): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+    val exists = pathExists(spark, path)
     require(checkCols.forall(current.columns.contains),
       s"check_cols ${checkCols.filterNot(current.columns.contains)} " +
         s"not in the snapshot select (${current.columns.toSeq})")
@@ -360,7 +372,7 @@ object Incremental {
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
     val next = if (!exists) incoming else {
-      val prev = spark.read.parquet(path)
+      val prev = IO.readParquet(spark, path)
       val prevCurrent = prev.filter(col("is_current"))
       val prevClosed = prev.filter(!col("is_current"))
       val joined = prevCurrent.as("p").join(
@@ -416,15 +428,13 @@ object Incremental {
       path: String, uniqueKey: Seq[String], updatedAt: String,
       asOf: java.sql.Timestamp,
       invalidateHardDeletes: Boolean = false): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+    val exists = pathExists(spark, path)
     val incoming = current
       .withColumn("valid_from", col(updatedAt).cast("timestamp"))
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
     val next = if (!exists) incoming else {
-      val prev = spark.read.parquet(path)
+      val prev = IO.readParquet(spark, path)
       val prevCurrent = prev.filter(col("is_current"))
       val prevClosed = prev.filter(!col("is_current"))
       val joined = prevCurrent.as("p").join(
@@ -499,12 +509,10 @@ object Incremental {
   def aggRefresh(spark: SparkSession, batch: DataFrame, path: String,
       key: String, valueMicro: org.apache.spark.sql.Column,
       distinctKey: org.apache.spark.sql.Column, m: Int = 256): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val scalarsPath = path + "/scalars"
     val regsPath = path + "/regs"
-    val haveScalars = fs.exists(new org.apache.hadoop.fs.Path(scalarsPath))
-    val haveRegs = fs.exists(new org.apache.hadoop.fs.Path(regsPath))
+    val haveScalars = pathExists(spark, scalarsPath)
+    val haveRegs = pathExists(spark, regsPath)
     // the two state tables advance together; half-present state means
     // a fold died between its swap-writes — refuse to fold on top of
     // it (re-bootstrapping or restoring is a caller decision). This
@@ -529,7 +537,7 @@ object Incremental {
         min(col("__v")).as("min_micro"), max(col("__v")).as("max_micro"))
     val mergedScalars =
       if (!exists) partial
-      else spark.read.parquet(scalarsPath).unionByName(partial)
+      else IO.readParquet(spark, scalarsPath).unionByName(partial)
         .groupBy(col(key))
         .agg(sum(col("cnt")).as("cnt"), sum(col("sum_micro")).as("sum_micro"),
           min(col("min_micro")).as("min_micro"), max(col("max_micro")).as("max_micro"))
@@ -539,7 +547,7 @@ object Incremental {
       proj.select(col(key), col("__dk")), key, "__dk", m)
     val mergedRegs =
       if (!exists) partialRegs
-      else spark.read.parquet(regsPath).unionByName(partialRegs)
+      else IO.readParquet(spark, regsPath).unionByName(partialRegs)
         .groupBy(col(key), col("reg")).agg(max(col("mj")).as("mj"))
     val regs = swapWrite(spark, mergedRegs, regsPath)
     // both states are on disk — the staged batch is dead

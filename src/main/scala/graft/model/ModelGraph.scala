@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.IO
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -256,7 +257,7 @@ final class Runner(
       case Materialization.Table =>
         val path = s"$warehouseDir/${m.name}"
         df.write.mode("overwrite").parquet(path)
-        val reread = spark.read.parquet(path)
+        val reread = IO.readParquet(spark, path)
         reread.createOrReplaceTempView(m.name)
         m.name -> reread
       case Materialization.Incremental(uniqueKey, onSchemaChange) =>
@@ -266,16 +267,16 @@ final class Runner(
             // merge bootstraps the first run itself
             Incremental.merge(spark, df, path, uniqueKey, onSchemaChange)
           else {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              spark.sparkContext.hadoopConfiguration)
-            val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
+            val p = new org.apache.hadoop.fs.Path(path)
+            val exists =
+              p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
             if (!exists) {
               df.write.mode("overwrite").parquet(path)
-              spark.read.parquet(path)
-            } else if (spark.read.parquet(path).columns.toSeq ==
+              IO.readParquet(spark, path)
+            } else if (IO.readParquet(spark, path).columns.toSeq ==
                 df.columns.toSeq) {
               df.write.mode("append").parquet(path)
-              spark.read.parquet(path)
+              IO.readParquet(spark, path)
             } else
               // schema drifted on the APPEND strategy: fold under
               // the same on_schema_change policy as merge

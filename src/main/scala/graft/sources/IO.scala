@@ -1,7 +1,15 @@
 package graft.sources
 
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Source/sink breadth (SURVEY §2.1 S4/S5): the reference's only I/O
   * is the BigQuery adapter; the Spark-native engine fronts parquet
@@ -11,8 +19,89 @@ import org.apache.spark.sql.functions._
   */
 object IO {
 
+  /** Parquet read whose schema is resolved on the driver, not by a job.
+    *
+    * A schema-less `spark.read.parquet(path)` submits a one-task
+    * schema-inference job (list, then read one footer on an executor)
+    * before the DataFrame even exists — a fixed ~100 ms per read that
+    * dominates small reads such as the re-reads of a CDC fold. Here the
+    * driver reads that same footer itself and hands the schema to
+    * `spark.read.schema(s).parquet(path)`, which plans with no job.
+    *
+    * The schema is the one Spark's inference would pick: with no
+    * summary files and no merge, Spark takes the first data file in path
+    * order and returns its `org.apache.spark.sql.parquet.row.metadata`
+    * schema when Spark wrote the file, else the Parquet schema converted
+    * under the session's conf (binaryAsString, int96AsTimestamp,
+    * inferTimestampNTZ, nanosAsLong, ...); this does the same.
+    *
+    * Falls back to plain `spark.read.parquet(path)` — and so to Spark's
+    * own resolution and errors — for `mergeSchema`, glob patterns,
+    * missing or empty paths, directories with sub-directories
+    * (partitioned layouts) or `_metadata`/`_common_metadata` summaries,
+    * an unparseable Spark schema string, or any failure reading the
+    * footer. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema [[readParquet]] hands to the reader, or None where it
+    * defers to Spark's inference. */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("*?[{\\".contains(_)))
+      return None
+    try {
+      val hconf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val fs = p.getFileSystem(hconf)
+      val st = fs.getFileStatus(p)
+      val first =
+        if (st.isFile) Some(st).filterNot(f => hiddenName(f.getPath.getName))
+        else {
+          val children = fs.listStatus(p)
+            .filterNot(c => hiddenName(c.getPath.getName))
+          if (children.exists(c => c.isDirectory || summaryName(c.getPath.getName))) None
+          else children.sortBy(_.getPath.toString).headOption
+        }
+      first.flatMap { f =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hconf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+        Option(meta.getKeyValueMetaData.get(SparkSchemaKey)) match {
+          case Some(json) =>
+            Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
+          case None =>
+            // the converter Spark's schema inference builds
+            // (ParquetFileFormat.mergeSchemasInParallel)
+            Some(new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation =
+                conf.parquetReaderRespectUnknownTypeAnnotation)
+              .convert(meta.getSchema))
+        }
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def summaryName(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
+
+  /** Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName):
+    * `_`/`.`-prefixed names and in-flight `._COPYING_` copies are not
+    * data, except the summary files. */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
 
   def readCsv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
@@ -86,7 +175,6 @@ object IO {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       partitionCols: Seq[String] = Nil): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(d: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -105,7 +193,7 @@ object IO {
       math.ceil(before.map(_.getLen).sum.toDouble / targetBytes).toInt)
     val tmp = new Path(path + ".compacting")
     fs.delete(tmp, true)
-    val src = spark.read.parquet(path)
+    val src = readParquet(spark, path)
     val w =
       if (partitionCols.nonEmpty)
         src.repartition(partitionCols.map(col): _*)

@@ -11,10 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At cluster scale the same API fronts a real catalog (Hive/Unity/Glue);
   * here it is a directory of parquet files. Reads are lazy — Catalyst
   * prunes columns and pushes filters into the scan, so `table(...)` is
-  * free until an action runs.
+  * free until an action runs: it submits no job, the schema coming
+  * from one footer read on the driver ([[IO.readParquet]]).
   */
 final class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = IO.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.Materialization
+import graft.sources.IO
 
 /** Load a dbt project DIRECTORY and run it — the literal switch story
   * for a user of the reference: point the engine at the checkout and
@@ -1852,7 +1853,7 @@ object DbtProject {
       val path = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
       if (!fs.exists(path)) Seq.empty
       else {
-        val df = spark.read.parquet(path.toString)
+        val df = IO.readParquet(spark, path.toString)
         val n = df.count()
         val rd = p.descriptions.get(name)
         val resourceDesc = rd.flatMap(_.description).getOrElse("")
@@ -1934,7 +1935,7 @@ object DbtProject {
       val src = new org.apache.hadoop.fs.Path(s"$fromWarehouse/$n")
       if (!fs.exists(src)) (n, "missing in state")
       else {
-        spark.read.parquet(src.toString).write
+        IO.readParquet(spark, src.toString).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$toWarehouse/$n")
         (n, "cloned")
@@ -2081,7 +2082,7 @@ object DbtProject {
       spark.sparkContext.hadoopConfiguration)
     val snapFrames = p.snapshots.keySet.toSeq.flatMap { n =>
       val path = new org.apache.hadoop.fs.Path(s"$warehouseDir/$n")
-      if (fs.exists(path)) Some(n -> spark.read.parquet(path.toString))
+      if (fs.exists(path)) Some(n -> IO.readParquet(spark, path.toString))
       else None
     }.toMap
     // seeds ride alongside the caller's sources: the engine registers
@@ -2179,7 +2180,7 @@ object DbtProject {
               val path = s"$warehouseDir/dbt_test__audit/" +
                 DbtTests.auditName(name, "singular")
               vr.write.mode("overwrite").parquet(path)
-              spark.read.parquet(path).count()
+              IO.readParquet(spark, path).count()
             } else vr.count()
             (name, "test", DbtTests.statusOf(n, r.config),
               s"$n violating rows")

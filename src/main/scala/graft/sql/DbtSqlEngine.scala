@@ -3,6 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 import graft.model.{Materialization, Model, ModelGraph, Runner}
+import graft.sources.IO
 
 /** Runs a dbt-style project of BigQuery-dialect SQL models on Spark:
   * Jinja source()/ref() calls define the DAG (SURVEY §2.11/§3), each
@@ -121,7 +122,7 @@ final class DbtSqlEngine(spark: SparkSession, warehouseDir: String,
               val path = s"$warehouseDir/dbt_test__audit/" +
                 DbtTests.auditName(m.name, label)
               vr.write.mode("overwrite").parquet(path)
-              spark.read.parquet(path).count()
+              IO.readParquet(spark, path).count()
             } else vr.count()
           val st = DbtTests.statusOf(n, t.config)
           testLog((m.name, label)) = (n, st)
@@ -369,7 +370,7 @@ final class DbtSqlEngine(spark: SparkSession, warehouseDir: String,
           tags = modelTags, preHooks = preHooks, postHooks = postHooks)({ _ =>
         // {{ this }} resolves to the resident target as of THIS run
         if (incrementalRun)
-          spark.read.parquet(targetPath.toString)
+          IO.readParquet(spark, targetPath.toString)
             .createOrReplaceTempView(s"${name}__this")
         val df = spark.sql(translated)
         // contract gate BEFORE the Runner writes anything — dbt's
@@ -432,7 +433,7 @@ final class DbtSqlEngine(spark: SparkSession, warehouseDir: String,
               .getOrElse("") +
             s" — widen the selector (e.g. '+<name>'), run '$d' first, " +
             "or pass defer = <production warehouse>")
-          spark.read.parquet(src.get.toString).createOrReplaceTempView(d)
+          IO.readParquet(spark, src.get.toString).createOrReplaceTempView(d)
         }
     }
     Prepared(chosen, effectiveSql, ephNames, compiled)

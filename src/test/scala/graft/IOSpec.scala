@@ -562,4 +562,129 @@ class IOSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS hot_idx_b_hot")
     }
   }
+
+  // IO.readParquet resolves the schema from a footer on the driver; it
+  // must be exactly the schema Spark's inference job would return
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `IO.readParquet(path).schema == spark.read.parquet(path).schema`,
+    * with the footer path taken (`resolved`) or the fallback. */
+  private def assertSchemaParity(path: String, resolved: Boolean = true): Unit = {
+    assert(IO.footerSchema(spark, path).isDefined === resolved,
+      s"$path: footer schema resolved must be $resolved")
+    assert(IO.readParquet(spark, path).schema === spark.read.parquet(path).schema, path)
+  }
+
+  test("readParquet: footer schema equals Spark's inferred one for decimal, NTZ, struct, array and map columns") {
+    val d = tmp("graft-footer") + "/t"
+    spark.range(0, 40, 1, 3).selectExpr("id",
+        "cast(id * 1.25 as decimal(12, 3)) as dec",
+        "cast(id as decimal(38, 10)) as wide_dec",
+        "timestamp_ntz'2026-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) as ntz",
+        "timestamp_seconds(id) as ts",
+        "date_add(date'2026-01-01', cast(id as int)) as day",
+        "named_struct('a', id, 'b', cast(id as string), 'c', named_struct('d', id * 2.0)) as st",
+        "array(id, id + 1) as arr",
+        "array(named_struct('x', cast(id as decimal(9, 2)))) as arr_st",
+        "map(cast(id as string), id) as m",
+        "map(id, array(cast(id as string))) as m_arr",
+        "cast(cast(id as string) as binary) as bin",
+        "cast(null as string) as nothing")
+      .write.parquet(d)
+    for (on <- Seq("true", "false")) withConf(nanosAsLong -> on) {
+      assertSchemaParity(d)
+      assert(IO.readParquet(spark, d).orderBy("id").collect().toSeq ===
+        spark.read.parquet(d).orderBy("id").collect().toSeq)
+    }
+  }
+
+  test("readParquet: footer schema equals Spark's inferred one on every testdata table, nanosAsLong on and off") {
+    // the smoke scale factor: the directory the entry query scans
+    val dir = new java.io.File(new java.net.URI(
+      SparkEntry.entry(spark).inputFiles.head)).getParent
+    val files = new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted
+    assert(files.length >= 10)
+    for (on <- Seq("true", "false"); f <- files)
+      withConf(nanosAsLong -> on)(assertSchemaParity(s"$dir/$f"))
+  }
+
+  test("readParquet: non-Spark footer (NANOS, NTZ, raw binary) follows the session conf") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message fixture {
+        |  required int64 id;
+        |  optional int64 ts (TIMESTAMP(NANOS,true));
+        |  optional int64 local_ts (TIMESTAMP(MICROS,false));
+        |  optional binary s (STRING);
+        |  optional binary raw;
+        |}""".stripMargin)
+    val f = tmp("graft-nanos") + "/fixture.parquet"
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(f))
+      .withConf(spark.sessionState.newHadoopConf()).withType(schema).build()
+    val g = new SimpleGroupFactory(schema)
+    for (i <- 0 until 5)
+      w.write(g.newGroup().append("id", i.toLong).append("ts", i * 1000000007L)
+        .append("local_ts", i * 1000000L).append("s", s"v$i")
+        .append("raw", Binary.fromString(s"r$i")))
+    w.close()
+    withConf(nanosAsLong -> "true") {
+      assertSchemaParity(f)
+      assert(IO.readParquet(spark, f).schema("ts").dataType ===
+        org.apache.spark.sql.types.LongType)
+      for ((k, v) <- Seq("spark.sql.parquet.binaryAsString" -> "true",
+          "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
+        withConf(k -> v)(assertSchemaParity(f))
+    }
+    // without nanosAsLong Spark refuses TIMESTAMP(NANOS): readParquet
+    // must raise Spark's own error, not one of its own
+    withConf(nanosAsLong -> "false") {
+      assert(IO.footerSchema(spark, f).isEmpty)
+      val theirs = intercept[Exception](spark.read.parquet(f))
+      val ours = intercept[Exception](IO.readParquet(spark, f))
+      assert(ours.getClass === theirs.getClass && ours.getMessage === theirs.getMessage)
+    }
+  }
+
+  test("readParquet falls back to Spark's inference: mergeSchema, summaries, partitions, empty and missing paths") {
+    val m = tmp("graft-merge") + "/t"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(m)
+    Seq((2L, 3.0)).toDF("id", "w").write.mode("append").parquet(m)
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assertSchemaParity(m, resolved = false)
+      assert(IO.readParquet(spark, m).columns.toSet === Set("id", "v", "w"))
+    }
+    // a `_metadata` summary decides Spark's pick, so defer to Spark
+    val s = tmp("graft-summary") + "/t"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s)
+    val part = new java.io.File(s).listFiles().find(_.getName.startsWith("part-")).get
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(s, "_metadata"))
+    assertSchemaParity(s, resolved = false)
+    // a partitioned insertOverwrite directory
+    val p = tmp("graft-iow") + "/t"
+    graft.model.Incremental.insertOverwrite(spark,
+      Seq((1L, "2026-01-01"), (2L, "2026-01-02")).toDF("id", "day"), p, "day")
+    assertSchemaParity(p, resolved = false)
+    // empty and missing paths raise Spark's own error
+    val empty = tmp("graft-empty")
+    for (path <- Seq(empty, empty + "/missing")) {
+      assert(IO.footerSchema(spark, path).isEmpty)
+      val theirs = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(path))
+      val ours = intercept[org.apache.spark.sql.AnalysisException](IO.readParquet(spark, path))
+      assert(ours.getCondition === theirs.getCondition && ours.getMessage === theirs.getMessage)
+    }
+  }
 }

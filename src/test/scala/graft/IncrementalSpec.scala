@@ -199,4 +199,116 @@ class IncrementalSpec extends AnyFunSuite {
     assert(spark.read.parquet(foldedPath + "/scalars").count() == 3)
     assert(spark.read.parquet(foldedPath + "/regs").count() <= 3 * 256)
   }
+
+  /** (all jobs, jobs outside any SQL execution) submitted by `body`.
+    * Schema inference runs while a DataFrame is being built, outside an
+    * execution; the stages of an action or a write run inside one. */
+  private def jobsOf(body: => Any): (Int, Int) = {
+    val sc = spark.sparkContext
+    val all = new java.util.concurrent.atomic.AtomicInteger
+    val bare = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
+        if (js.properties == null ||
+            js.properties.getProperty("spark.sql.execution.id") == null)
+          bare.incrementAndGet()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.TestListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    (all.get, bare.get)
+  }
+
+  test("guarded CDC fold: readCdcTable submits no job; applyChangesGuarded two fewer than with inferred schemas") {
+    val b1 = (1L to 20L).map(k => (k, s"v$k", "I", 1L)).toDF("k", "v", "op", "seq")
+    val b2 = Seq((3L, "u", "U", 2L), (4L, null, "D", 2L), (30L, "n", "I", 2L))
+      .toDF("k", "v", "op", "seq")
+    val fast = tmp("graft-cdc-jobs-a")
+    val legacy = tmp("graft-cdc-jobs-b")
+    for (p <- Seq(fast, legacy)) Incremental.applyChangesGuarded(spark, b1, p, Seq("k"))
+    // mergeSchema makes IO.readParquet defer to Spark's inference: the
+    // fold's reads then cost what plain spark.read.parquet costs
+    def inferred[T](body: => T): T = {
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try body finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
+    assert(jobsOf(Incremental.readCdcTable(spark, fast)) === (0, 0))
+    assert(inferred(jobsOf(Incremental.readCdcTable(spark, legacy))) === (1, 1))
+    val (applyJobs, applyBare) =
+      jobsOf(Incremental.applyChangesGuarded(spark, b2, fast, Seq("k")))
+    val (legacyJobs, legacyBare) =
+      inferred(jobsOf(Incremental.applyChangesGuarded(spark, b2, legacy, Seq("k"))))
+    assert(applyBare === 0, "every job must belong to the fold's write")
+    assert(legacyBare === 2 && applyJobs === legacyJobs - 2,
+      s"fold: $applyJobs jobs against $legacyJobs with inferred schemas")
+    def live(p: String) = Incremental.readCdcTable(spark, p).orderBy("k").collect().toSeq
+    assert(live(fast) === live(legacy))
+    assert(live(fast).map(_.getLong(0)) === (1L to 20L).filterNot(_ == 4L) :+ 30L)
+  }
+
+  test("swap-write: a refused rename fails loudly, naming both paths; the new table survives staged") {
+    val path = tmp("graft-swap-refused")
+    Incremental.applyChangesGuarded(spark,
+      Seq((1L, "a", "I", 1L)).toDF("k", "v", "op", "seq"), path, Seq("k"))
+    // resolved per path under the session's conf, uncached, so the
+    // refusing file system serves exactly this fold
+    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val e = try intercept[java.io.IOException](Incremental.applyChangesGuarded(spark,
+        Seq((2L, "b", "I", 2L)).toDF("k", "v", "op", "seq"), path, Seq("k")))
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(e.getMessage.contains(s"${path}__tmp") && e.getMessage.contains(s"to $path"),
+      e.getMessage)
+    assert(spark.read.parquet(path + "__tmp").select("k").as[Long].collect().sorted
+      .toSeq === Seq(1L, 2L))
+  }
+
+  test("NioLocalFileSystem sets the modes Hadoop's LocalFileSystem sets; the sticky bit falls back") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.sources.NioLocalFileSystem
+    // the session runs the file system GraftSession.local ships
+    assert(new Path(tmp("graft-fs-session"))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+      .isInstanceOf[NioLocalFileSystem])
+    def mode(p: String): Int =
+      Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff
+    def modesUnder(impl: Class[_ <: FileSystem], umask: String): Seq[Int] = {
+      val conf = new org.apache.hadoop.conf.Configuration()
+      conf.set("fs.file.impl", impl.getName)
+      conf.set("fs.permissions.umask-mode", umask)
+      val fs = FileSystem.newInstance(new java.net.URI("file:///"), conf)
+      try {
+        assert(fs.getClass === impl)
+        val root = tmp("graft-fs-modes")
+        assert(fs.mkdirs(new Path(s"$root/a/b/c")))
+        val out = fs.create(new Path(s"$root/a/b/c/part-0"))
+        out.write(42); out.close()
+        fs.mkdirs(new Path(s"$root/x"), new FsPermission("750"))
+        fs.setPermission(new Path(s"$root/a/b/c/part-0"), new FsPermission("604"))
+        fs.setPermission(new Path(s"$root/x"), new FsPermission("1777"))
+        intercept[java.io.IOException](
+          fs.setPermission(new Path(s"$root/missing"), new FsPermission("644")))
+        Seq("a", "a/b", "a/b/c", "a/b/c/part-0", "a/b/c/.part-0.crc", "x")
+          .map(r => mode(s"$root/$r"))
+      } finally fs.close()
+    }
+    for (umask <- Seq("022", "077", "002")) {
+      val hadoop = modesUnder(classOf[LocalFileSystem], umask)
+      assert(modesUnder(classOf[NioLocalFileSystem], umask) === hadoop, s"umask $umask")
+      assert(hadoop.last === 0x3ff, "sticky bit must survive")
+    }
+  }
+}
+
+/** Refuses (returns false for) renames of a swap-write's staged table. */
+class RenameRefusingFileSystem extends graft.sources.NioLocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.endsWith("__tmp") && super.rename(src, dst)
 }
