@@ -9,21 +9,22 @@ object Verify {
       System.err.println("usage: graft.Verify <sfDir> <outDir> [onlyQuery1,onlyQuery2,...]")
       sys.exit(2)
     }
-    val sfDir = args(0)
-    val outDir = args(1)
     // optional 3rd arg (builder-local only; the driver passes 2):
     // comma-separated query names to dump, for fast single-query checks
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sql.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, "graft-verify")
+    dump(spark, args(0), args(1), only)
+    spark.stop()
+  }
+
+  /** Write each selected SparkEntry query's result on `sfDir` to
+    * `<outDir>/<name>` (one parquet file) and every oracle to
+    * `<outDir>/oracle_sql.json`. A failing query is reported on stderr
+    * and skipped, so one bad query never hides the rest. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -52,6 +53,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * this engine release provably-dead checkpoints inline (superseded
   * loop states, intermediates whose only consumers are themselves
   * eagerly materialized); session owners reclaim the rest with
-  * [[releaseAll]] once a stage's results are consumed ([[graft.Bench]]
-  * and [[graft.Verify]] do, between queries, so measurements reflect
-  * plans rather than accumulated pinned storage).
+  * [[releaseAll]] once a stage's results are consumed ([[graft.Verify]]
+  * does, between queries, so a long dump never accumulates pinned
+  * storage).
   */
 object Checkpoints {
 

@@ -24,14 +24,9 @@ object Incremental {
     * a refused rename fails loudly: the new table is left at the staged
     * path rather than silently lost. */
   private def swapWrite(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val tmp = new Path(path + "__tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"swap-write could not rename $tmp to $dst; the new table is at $tmp")
+    val tmp = path + "__tmp"
+    df.write.mode("overwrite").parquet(tmp)
+    IO.swapInto(spark, tmp, path)
     IO.readParquet(spark, path)
   }
 

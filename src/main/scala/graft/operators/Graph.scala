@@ -653,7 +653,7 @@ object Graph {
     * stays pinned is exactly the walkLen position tables the returned
     * union reads (one row per surviving walk each — tiny); callers
     * reclaim them with Checkpoints.releaseAll once consumed, as
-    * Verify/Bench do (GraphSpec asserts this count).
+    * Verify does (GraphSpec asserts this count).
     *
     * @return (start, walk, step, node) rows: step 0 is the start node
     *         itself, steps 1..walkLen the visited nodes.
@@ -1164,22 +1164,13 @@ object Graph {
     *         = triangles inside the truss */
   def kTruss(edges: DataFrame, k: Int = 4, maxRounds: Int = 30,
       broadcastMaxEdges: Long = 20000000L,
-      collectThreshold: Long = 5000000L,
-      // phase-attribution hook (label, seconds): no-op by default;
-      // graft.tools.KtrussProbe passes a printer so attribution is
-      // measured ON the shipping operator instead of a mirror that
-      // goes stale (the r18 probe mirrored the pre-tombstone loop)
-      phaseTimer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    def pt[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      phaseTimer(label, (System.nanoTime() - t0) / 1e9); r
-    }
-    var e = pt("edges ckpt") { edges.select(
+      collectThreshold: Long = 5000000L): DataFrame = {
+    var e = edges.select(
         least(col("src"), col("dst")).cast(LongType).as("u"),
         greatest(col("src"), col("dst")).cast(LongType).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint() }
-    val eCnt = pt("edges count")(e.count())
+      .localCheckpoint()
+    val eCnt = e.count()
     val smallGraph = eCnt <= broadcastMaxEdges
     def gate(t: DataFrame): DataFrame = if (smallGraph) broadcast(t) else t
     // One-shot triangle enumeration via the [[triangleCount]]
@@ -1212,9 +1203,9 @@ object Graph {
         .select(
           when(flip, col("ev")).otherwise(col("eu")).as("src"),
           when(flip, col("eu")).otherwise(col("ev")).as("dst"))
-      val adjC = pt("adjacency ckpt") { oriented.groupBy(col("src"))
+      val adjC = oriented.groupBy(col("src"))
         .agg(collect_list(col("dst")).as("nbrs"))
-        .localCheckpoint() }
+        .localCheckpoint()
       val adj = gate(adjC)
       // The probe stream is adjC EXPLODED (r18): each (src → nbrs)
       // row yields exactly the oriented edges (src, dst) with N⁺(src)
@@ -1222,13 +1213,13 @@ object Graph {
       // join against adj both disappear; above the broadcast gate it
       // is one exchange fewer (the explode inherits adjC's
       // partitioning — only the dst-keyed probe join shuffles).
-      val out = pt("tri3 ckpt") { adjC.as("A")
+      val out = adjC.as("A")
         .select(col("A.src").as("ps"), col("A.nbrs").as("n_a"),
           explode(col("A.nbrs")).as("pd"))
         .join(adj.as("B"), col("pd") === col("B.src"))
         .select(col("ps").as("src"), col("pd").as("dst"),
           explode(array_intersect(col("n_a"), col("B.nbrs"))).as("w"))
-        .localCheckpoint() }
+        .localCheckpoint()
       graft.ext.Checkpoints.release(adjC)
       out
     }
@@ -1251,7 +1242,7 @@ object Graph {
           struct(col("e3u").as("u"), col("e3v").as("v")))).as("te"))
         .select(col("te.u").as("u"), col("te.v").as("v"))
     var tri3 = triangles3(e)
-    val triCnt = pt("tri3 count")(tri3.count())
+    val triCnt = tri3.count()
     if (eCnt <= collectThreshold && triCnt <= collectThreshold) {
       // in-memory worklist peel: CSR edge→triangle index, each dead
       // triangle hands one decrement to each of its other live edges
@@ -1265,7 +1256,7 @@ object Graph {
       // long arrays + linear-probing open addressing (power-of-2
       // capacity, load <= 0.5, mixed 64-bit hash — endpoint ids are
       // arbitrary longs, no 32-bit packing) make the index ~free.
-      val eRowsRaw = pt("fast collect edges")(e.collect())
+      val eRowsRaw = e.collect()
       val m = eRowsRaw.length
       val eu = new Array[Long](m); val ev = new Array[Long](m)
       var i = 0
@@ -1273,9 +1264,8 @@ object Graph {
         val r = eRowsRaw(i); eu(i) = r.getLong(0); ev(i) = r.getLong(1)
         i += 1
       }
-      val tRowsRaw = pt("fast collect triangles")(tri3.collect())
+      val tRowsRaw = tri3.collect()
       graft.ext.Checkpoints.release(e, tri3) // on the driver now
-      val tIdx0 = System.nanoTime()
       var cap = 4
       while (cap < m * 2) cap <<= 1
       val mask = cap - 1
@@ -1337,7 +1327,6 @@ object Graph {
         }
         i += 1
       }
-      phaseTimer("fast index+csr build", (System.nanoTime() - tIdx0) / 1e9)
       val alive = Array.fill(m)(true)
       val triAlive = Array.fill(nTri)(true)
       val need = (k - 2).max(0)
@@ -1355,7 +1344,7 @@ object Graph {
       // keep applying to pending-but-not-yet-removed edges, exactly
       // as the distributed sup table keeps decrementing edges that
       // are still in e.
-      if (need > 0) pt("fast peel") {
+      if (need > 0) {
         val pending = new Array[Boolean](m)
         var frontier = new java.util.ArrayDeque[Int]()
         i = 0
@@ -1404,7 +1393,7 @@ object Graph {
       // tail, ~3.5 s at sf0.1 outside every probe phase. A range-
       // keyed mapPartitions converts slices in PARALLEL; the survivor
       // arrays ride the stage's task binary once, not per row.
-      val (oSrc, oDst, oSup) = pt("fast result build") {
+      val (oSrc, oDst, oSup) = {
         var n = 0
         i = 0
         while (i < m) { if (alive(i)) n += 1; i += 1 }
@@ -1438,7 +1427,7 @@ object Graph {
     // every other edge's peel trajectory, and the survivor set,
     // bit-identical while skipping an edge-table-sized union through
     // the seeding shuffle.
-    var sup = pt("seed sup ckpt") {
+    var sup = {
       val credits = creditsOf(tri3.select(canonCols: _*))
         .select(col("u"), col("v"), lit(1L).as("c"))
       // (maxRounds >= 1 guard: a zero-round call never executes the
@@ -1458,7 +1447,7 @@ object Graph {
     // expensive compaction (rewrite tri3 + sup, reset accumulators)
     // runs only when an accumulator outgrows the broadcast gate —
     // at which point a round costs exactly what every round used to.
-    // KtrussProbe attribution motivating this: at sf0.1 the tail
+    // Phase attribution motivating this: at sf0.1 the tail
     // rounds spent 1.5-2.5 s/round rewriting a 1.9M-row triangle
     // table + 1.2M-row support table to remove shells of 4-1700
     // edges. At 100 TB early rounds have huge shells (they compact,
@@ -1544,9 +1533,8 @@ object Graph {
     // (the 2-truss IS the whole graph) — skip peeling; the seeded
     // sup, zeros and all, is already the answer.
     while (!converged && round < maxRounds && k > 2) {
-      val below = pt(s"r$round below ckpt") {
-        curSup().filter(col("support") < need)
-          .select("u", "v").localCheckpoint() }
+      val below = curSup().filter(col("support") < need)
+        .select("u", "v").localCheckpoint()
       val belowCnt = below.count()
       if (belowCnt == 0) {
         converged = true
@@ -1573,18 +1561,17 @@ object Graph {
         // fold this round's credits into the accumulator (tiny:
         // bounded by 3 × cumulative dead triangles since the last
         // compaction, counted for the gate above)
-        val nextDel = pt(s"r$round delta ckpt") {
-          val roundDelta = creditsOf(dead)
-            .groupBy("u", "v").agg(count(lit(1)).as("delta"))
-          (if (delCnt > 0) delAcc.unionAll(roundDelta)
+        val roundDelta = creditsOf(dead)
+          .groupBy("u", "v").agg(count(lit(1)).as("delta"))
+        val nextDel = (if (delCnt > 0) delAcc.unionAll(roundDelta)
             .groupBy("u", "v").agg(sum(col("delta")).as("delta"))
-          else roundDelta).localCheckpoint() }
+          else roundDelta).localCheckpoint()
         delCnt = nextDel.count()
         // below is already checkpointed — it IS the accumulator when
         // none existed; union-and-rematerialize only when folding
-        val nextRem = pt(s"r$round rem ckpt") {
+        val nextRem =
           if (remCnt > 0) remAcc.unionAll(below).localCheckpoint()
-          else below }
+          else below
         val deadCk = Seq(Option(delAcc),
           Option(if (remCnt > 0) remAcc else null),
           Option(if (remCnt > 0) below else null)).flatten
@@ -1599,9 +1586,9 @@ object Graph {
         // pass over the compacted tables. To guarantee progress the
         // shell itself joins in as tombstones first.
         val hadRem = remCnt > 0
-        val nextRem = pt(s"r$round rem ckpt (pre-compact)") {
+        val nextRem =
           if (hadRem) remAcc.unionAll(below).localCheckpoint()
-          else below }
+          else below
         remCnt += belowCnt
         // credit deltas for triangles newly dead to this shell must
         // be folded BEFORE the shell enters remAcc-compaction, so
@@ -1612,19 +1599,18 @@ object Graph {
             remCnt - belowCnt <= broadcastMaxEdges)
           .filter(!anyHit("c"))
         dead = dead.filter(anyHit("d"))
-        val nextDel = pt(s"r$round delta ckpt (pre-compact)") {
-          val roundDelta = creditsOf(dead)
-            .groupBy("u", "v").agg(count(lit(1)).as("delta"))
-          (if (delCnt > 0) delAcc.unionAll(roundDelta)
+        val roundDelta = creditsOf(dead)
+          .groupBy("u", "v").agg(count(lit(1)).as("delta"))
+        val nextDel = (if (delCnt > 0) delAcc.unionAll(roundDelta)
             .groupBy("u", "v").agg(sum(col("delta")).as("delta"))
-          else roundDelta).localCheckpoint() }
+          else roundDelta).localCheckpoint()
         delCnt = nextDel.count()
         val deadCk = Seq(Option(delAcc),
           Option(if (hadRem) remAcc else null),
           Option(if (hadRem) below else null)).flatten
         graft.ext.Checkpoints.release(deadCk: _*)
         delAcc = nextDel; remAcc = nextRem
-        pt(s"r$round compact")(compact())
+        compact()
       }
       round += 1
     }
@@ -1632,9 +1618,8 @@ object Graph {
     // construction at convergence, at a maxRounds bail-out (the
     // pending shell stays, with its maintained supports — identical
     // to the fast path's shell-capped exit), and for k <= 2
-    val out = pt("final fold ckpt") {
-      curSup().select(col("u").as("src"), col("v").as("dst"),
-        col("support")).localCheckpoint() }
+    val out = curSup().select(col("u").as("src"), col("v").as("dst"),
+      col("support")).localCheckpoint()
     val deadFin = Seq(Option(sup), Option(tri3), Option(remAcc),
       Option(delAcc)).flatten
     graft.ext.Checkpoints.release(deadFin: _*)

@@ -52,7 +52,9 @@ private[operators] object HashIndexWriter {
     * no atomic catalog rename — so callers run compact in the
     * maintenance window that already serializes appends; a failure
     * INSIDE the swap leaves the complete staging copy on disk for
-    * manual rename, never zero copies. */
+    * manual rename, never zero copies, and a refused rename throws
+    * ([[graft.sources.IO.swapInto]]) instead of re-registering the
+    * table over an empty location. */
   def compact(spark: SparkSession, table: String, path: String): Unit = {
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
@@ -61,10 +63,10 @@ private[operators] object HashIndexWriter {
     val bucketCol = spec.bucketColumnNames.head
     val staging = table + "__staging"
     val stagingPath = path + "__staging"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     spark.sql(s"DROP TABLE IF EXISTS $staging")
-    fs.delete(new org.apache.hadoop.fs.Path(stagingPath), true)
+    val stagingDir = new org.apache.hadoop.fs.Path(stagingPath)
+    stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(stagingDir, true)
     // one shuffle to the bucket width → exactly one file per bucket,
     // streamed straight from the ORIGINAL files (still live) into the
     // staging location — no in-memory-only copy ever holds the data
@@ -78,9 +80,7 @@ private[operators] object HashIndexWriter {
     val schemaDdl = spark.table(staging).schema.toDDL
     spark.sql(s"DROP TABLE IF EXISTS $staging")
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(stagingPath),
-      new org.apache.hadoop.fs.Path(path))
+    graft.sources.IO.swapInto(spark, stagingPath, path)
     spark.sql(
       s"CREATE TABLE $table ($schemaDdl) USING parquet " +
       s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +

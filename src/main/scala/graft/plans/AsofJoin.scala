@@ -22,9 +22,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * partition: O(|L| + |R|) with zero intermediate blowup. That is the
   * shape that survives 100 TB of fact data.
   *
-  * Measured honestly (tools.AsofBench, sf0.1, ~20k×20k, ~13 candidates
-  * per row): parity with the composition — the fan-out is too small to
-  * matter at this scale. The native win is structural: composed cost is
+  * Measured honestly (sf0.1, ~20k×20k, ~13 candidates per row):
+  * parity with the composition — the fan-out is too small to matter at
+  * this scale. The native win is structural: composed cost is
   * O(|L| · candidates-per-row) through a shuffle+window, so it grows
   * with right-side density and lookback; the merge stays O(|L| + |R|).
   *

@@ -49,7 +49,7 @@ object ReferenceModelQueries {
   def qUserBaseChecks(spark: SparkSession, dir: String): DataFrame = {
     // materialize the mart once — both checks read the checkpoint
     // instead of re-executing the 3-model DAG (callers reclaim via
-    // Checkpoints.releaseAll, as Verify/Bench do between queries)
+    // Checkpoints.releaseAll, as Verify does between queries)
     val mart = qUserBase(spark, dir).localCheckpoint()
     val notNull = DataChecks.notNull(mart, "user_id")
       .agg(count(lit(1)).as("violations"))

@@ -133,7 +133,7 @@ object ScalarQueries {
     * box — pushdown-able comparisons on the point columns — AND the
     * exact codegen'd haversine residual, so only box rows pay the
     * transcendentals. The rule is registered at session BUILD
-    * (GraftExtensions / Verify / Bench), never here: a query function
+    * (GraftExtensions via GraftSession.local), never here: a query function
     * mutating the shared session's extraOptimizations would leak the
     * rule into unrelated queries and tests. On a session without the
     * rule this is still exactly correct — just unindexed (the

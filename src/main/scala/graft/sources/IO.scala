@@ -47,6 +47,22 @@ object IO {
       case None => spark.read.parquet(path)
     }
 
+  /** Replace the directory at `path` with the fully written one at
+    * `staged`, on `path`'s own file system: exactly one recursive delete
+    * of the live copy, then one rename. Neither step is atomic with the
+    * other, so callers write `staged` completely first; a refused rename
+    * throws an IOException naming both paths and leaves the new copy at
+    * `staged` rather than silently losing it. */
+  def swapInto(spark: SparkSession, staged: String, path: String): Unit = {
+    val src = new Path(staged)
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(dst, true)
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(
+        s"swap could not rename $src to $dst; the new copy is at $src")
+  }
+
   /** The schema [[readParquet]] hands to the reader, or None where it
     * defers to Spark's inference. */
   private[graft] def footerSchema(spark: SparkSession,

@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * every semantic decomposes into codegen'd built-ins; SURVEY §4).
   *
   * Two registration paths:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions`
+  *  - [[GraftExtensions]] for a session built with them
+  *    ([[graft.GraftSession.local]] injects them)
   *  - [[GraftFunctions.register]] for a live session (temp functions)
   *
   * After registration, `spark.sql` accepts e.g.
@@ -1653,9 +1654,9 @@ object GraftFunctions {
   }
 }
 
-/** `SparkSession.builder.withExtensions(new GraftExtensions)` — the
-  * injection path for sessions created with the functions from the
-  * start. */
+/** Session-builder `withExtensions(new GraftExtensions)`, as
+  * [[graft.GraftSession.local]] does — the injection path for sessions
+  * created with the functions from the start. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>

@@ -194,6 +194,30 @@ class IOSpec extends AnyFunSuite {
     }
   }
 
+  test("hash index compact: a refused swap rename fails loudly and keeps the staging copy") {
+    import graft.operators.FingerprintIndex
+    val path = tmp("graft-fpswap") + "/idx"
+    FingerprintIndex.writeIndex(Seq((1L, "aa bb cc"), (2L, "dd ee ff"))
+      .toDF("doc_id", "text"), "fp_swap_b", path)
+    val rows = spark.table("fp_swap_b").collect().toSet
+    // resolved per path under the session's conf, uncached, so the
+    // refusing file system serves exactly this compaction
+    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val e = try intercept[java.io.IOException](
+          FingerprintIndex.compact(spark, "fp_swap_b", path))
+        finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+      assert(e.getMessage.contains(s"${path}__staging") &&
+        e.getMessage.contains(s"to $path"), e.getMessage)
+      assert(spark.read.parquet(path + "__staging").collect().toSet === rows)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS fp_swap_b")
+      spark.sql("DROP TABLE IF EXISTS fp_swap_b__staging")
+    }
+  }
+
   test("shingle index noveltyProbe: df cap cannot distort novelty (hot companion restores exactness)") {
     import graft.operators.ShingleIndex
     val hist = Seq(

@@ -306,9 +306,11 @@ class IncrementalSpec extends AnyFunSuite {
   }
 }
 
-/** Refuses (returns false for) renames of a swap-write's staged table. */
+/** Refuses (returns false for) renames of a staged copy: a swap-write's
+  * `__tmp` table or a hash-index compaction's `__staging` directory. */
 class RenameRefusingFileSystem extends graft.sources.NioLocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    !src.getName.endsWith("__tmp") && super.rename(src, dst)
+    !Seq("__tmp", "__staging").exists(src.getName.endsWith) &&
+      super.rename(src, dst)
 }

@@ -42,4 +42,23 @@ class InventorySpec extends AnyFunSuite {
     assert((q diff o).isEmpty, s"queries without oracle: ${(q diff o).toSeq.sorted}")
     assert((o diff q).isEmpty, s"oracles without query: ${(o diff q).toSeq.sorted}")
   }
+
+  test("GraftSession is the only session builder; no probe mains or bench knobs in src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val sources: Seq[(String, String)] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .map(p => root.relativize(p).toString -> Files.readString(p))
+      finally walk.close()
+    }
+    val builders = sources.collect {
+      case (f, text) if text.contains("SparkSession.builder") => f }
+    assert(builders === Seq("graft/GraftSession.scala"))
+    for (banned <- Seq("graft.tools", "SPARK_GRAFT_BENCH_", "QBENCH_REPS")) {
+      val hits = sources.collect { case (f, text) if text.contains(banned) => f }
+      assert(hits.isEmpty, s"$banned mentioned in ${hits.sorted}")
+    }
+  }
 }

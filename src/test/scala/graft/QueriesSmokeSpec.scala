@@ -30,6 +30,18 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
+
+  test("Verify.dump writes the selected results and an oracle_sql.json that round-trips") {
+    val out = java.nio.file.Files.createTempDirectory("graft-verify").toString
+    Verify.dump(spark, dir, out, Some(Set("q1_agg")))
+    assert(spark.read.parquet(s"$out/q1_agg").count() > 0)
+    assert(!new java.io.File(s"$out/q_tpch_q3").exists())
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
+      new java.io.File(s"$out/oracle_sql.json"),
+      classOf[java.util.Map[String, String]])
+    import scala.jdk.CollectionConverters._
+    assert(parsed.asScala.toMap === SparkEntry.oracleSql)
+  }
 }
 
 object SparkTestSession {
