@@ -11,7 +11,19 @@ import graft.sql.GraftExtensions
   *    default — SURVEY §4); on a real cluster, set to 2–3× total cores
   *  - UTC + ANSI-off for BigQuery SAFE-parse parity (BASELINE.md)
   *  - GraftExtensions injected so st_distance/regexp_contains/
-  *    dot_product etc. work in SQL from the first query
+  *    dot_product etc. work in SQL from the first query, with its plan
+  *    rules ([[graft.plans]]):
+  *     - single-partition shuffle elision: an adaptive plan whose inputs
+  *       are all one partition (file scans of ~4 MB or less) runs in one
+  *       job, each `ENSURE_REQUIREMENTS` exchange replaced by
+  *       `Coalesce 1`; all or nothing per plan, never for user
+  *       repartitions, `REBALANCE`, bucketed scans or scans with
+  *       dynamic-pruning filters, and counted from the file listing,
+  *       not the scan's RDD
+  *     - filter-literal hoisting: numeric/date/timestamp literals
+  *       compared in a `Filter` are read from the generated class's
+  *       references, so a template's new key reuses its compiled
+  *       code; scans and their pushed filters keep the literal
   *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
   *    local file system with permissions set through java.nio instead
   *    of a forked `chmod` per directory, part file and `.crc` (no

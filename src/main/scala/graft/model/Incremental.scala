@@ -168,9 +168,16 @@ object Incremental {
     * by the deleted-key count; [[compactGuarded]] drops the ones older
     * than the feed's replay horizon.
     *
+    * Schema drift fails loudly: a batch whose columns differ from the
+    * table's (either way) throws before the swap, as `merge` does
+    * under `on_schema_change='fail'`, and the table stays as it was.
+    *
     * Jobs: only the swap-write's — on an existing table AQE runs the
     * batch's exchange (shared by the window and the key join), the
-    * base's exchange and the write as three jobs. No job resolves a
+    * base's exchange and the write as three jobs; when the base and
+    * the batch each read as one partition (files of ~4 MB or less),
+    * [[graft.plans.ElideSinglePartitionShuffles]] drops both exchanges
+    * and the write is the fold's one job. No job resolves a
     * schema: the base read and the swap-write's re-read take theirs
     * from a footer on the driver ([[graft.sources.IO.readParquet]]),
     * where a schema-less `spark.read.parquet` would add one job each. */
@@ -190,6 +197,10 @@ object Incremental {
       .withColumnRenamed(seqCol, "__seq")
     val next = if (!exists) incoming else {
       val existing = IO.readParquet(spark, path)
+      // a column on one side only would be dropped or null-filled by
+      // the fold below: fail before anything is written (both column
+      // lists are known on the driver, so the check runs no job)
+      resolveSchemaChange(existing, incoming, "fail", path)
       // ONE full-outer join replaces the anti-join + semi-join +
       // union + table-wide window of the previous shape (r19, §2.4):
       // base and batch winner are both UNIQUE per key, so resolution

@@ -72,8 +72,10 @@ object Graph {
     // instead of E, contributions derived by explode AFTER the join
     // — the same (dst, rank div odeg) multiset through an order-free
     // long sum, so ranks are bit-identical on both shapes (GraphSpec
-    // pins gate-off ≡ gate-on). Chunking bounds every adjacency row
-    // at 1024 neighbors via a deterministic dst-hash, so a celebrity
+    // pins gate-off ≡ gate-on). Chunking spreads a node's neighbors
+    // over ceil(odeg / 1024) chunks by a deterministic dst-hash, so an
+    // adjacency row holds ~1024 neighbors IN EXPECTATION (a hash is no
+    // hard cap: one chunk can run somewhat over), and a celebrity
     // hub cannot become one multi-GB array cell (the §2.5 giant-key
     // failure plain collect_list would reintroduce; triangleCount
     // gets the bound free from orientation, PageRank does not), and

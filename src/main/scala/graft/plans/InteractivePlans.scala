@@ -1,0 +1,172 @@
+package graft.plans
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen._
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{FilePartition, WriteFilesExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.types._
+
+/** Physical rules for interactive (small-input) queries, where a query's
+  * cost is its fixed per-job and per-compile overhead rather than its
+  * data. Both are injected by [[graft.sql.GraftExtensions]] and have no
+  * switch of their own. */
+
+/** Single-partition shuffle elision. When every input of a plan already
+  * yields one partition, an exchange only splits that partition to
+  * re-merge it: a stage boundary (under AQE a separate job) and a
+  * shuffle write/read for nothing. This rule replaces each
+  * `ENSURE_REQUIREMENTS` [[ShuffleExchangeExec]] with `CoalesceExec(1)`,
+  * whose `SinglePartition` output satisfies every distribution a
+  * parent can ask for, so the query runs in one stage.
+  *
+  * Guards:
+  *  - all or nothing: the plan is rewritten only if EVERY such exchange
+  *    in it has a one-partition child (an exchange fed by an elided one
+  *    counts as one partition), so a join never zips a one-partition
+  *    side with a many-partition side;
+  *  - the partition count of a file scan comes from its file listing
+  *    and Spark's own split sizing (`FilePartition`), never from
+  *    `inputRDD`, which would broadcast a Hadoop configuration per plan;
+  *  - user `repartition` and `REBALANCE` shuffles, bucketed scans, scans
+  *    with dynamic-pruning filters, query stages and any operator not
+  *    known to keep its child's partition count leave the plan as it is;
+  *  - so do row-multiplying operators (`Generate`, `Expand`): an
+  *    `explode` over a small file can feed far more rows than the file
+  *    holds, and a one-partition result (say, a checkpointed shingle
+  *    table) would make every later stage that reads it one task.
+  *
+  * Injected with `injectQueryStagePrepRule`, so it runs after AQE's
+  * `EnsureRequirements`; such rules run only in adaptive (batch) plans,
+  * never in streaming micro-batches. */
+object ElideSinglePartitionShuffles extends Rule[SparkPlan] {
+
+  override def apply(plan: SparkPlan): SparkPlan = {
+    val hasExchange = plan.exists {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == ENSURE_REQUIREMENTS
+      case _ => false
+    }
+    if (!hasExchange || single(plan).isEmpty) plan
+    else plan.transformUp {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == ENSURE_REQUIREMENTS =>
+        CoalesceExec(1, s.child)
+    }
+  }
+
+  /** Whether `p` yields one partition once the exchanges below it are
+    * elided: None when that is unknown or an exchange below must stay. */
+  private def single(p: SparkPlan): Option[Boolean] = p match {
+    case s: ShuffleExchangeExec =>
+      if (s.shuffleOrigin == ENSURE_REQUIREMENTS && single(s.child).contains(true))
+        Some(true)
+      else None
+    case b: BroadcastExchangeExec => single(b.child).map(_ => true)
+    case f: FileSourceScanExec => scanIsSingle(f)
+    // Generate and Expand are absent on purpose: they multiply rows,
+    // so a small input no longer bounds the work one task would do
+    case _: ProjectExec | _: FilterExec | _: SortExec | _: BaseAggregateExec |
+        _: WindowExec | _: WindowGroupLimitExec | _: LocalLimitExec |
+        _: GlobalLimitExec | _: SampleExec | _: WriteFilesExec |
+        _: DataWritingCommandExec =>
+      single(p.children.head)
+    case _: CollectLimitExec | _: TakeOrderedAndProjectExec =>
+      single(p.children.head).map(_ => true)
+    case j: BaseJoinExec =>
+      // broadcast sides are collected whole; the sides a join zips
+      // partition by partition must agree
+      val (bcast, zipped) = j.children.partition(_.isInstanceOf[BroadcastExchangeExec])
+      val sides = zipped.map(single).distinct
+      if (bcast.forall(single(_).isDefined) && sides.size == 1) sides.head else None
+    case _ => None
+  }
+
+  private def scanIsSingle(f: FileSourceScanExec): Option[Boolean] = {
+    val isDpp = f.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruningExpression]))
+    if (f.bucketedScan || isDpp) return None
+    val rel = f.relation
+    val session = rel.sparkSession
+    val conf = session.sessionState.conf
+    val listing = f.selectedPartitions
+    val files = listing.totalNumberOfFiles
+    // each file after the first adds its open cost to a partition that
+    // may hold at most maxPartitionBytes
+    if (files > 1 && (files - 1) * conf.filesOpenCostInBytes > conf.filesMaxPartitionBytes)
+      return Some(false)
+    val maxSplit = FilePartition.maxSplitBytes(session, listing)
+    val splits = listing.filePartitionIterator.flatMap { part =>
+      part.files.flatMap { file =>
+        val path = file.getPath
+        PartitionedFileUtil.splitFiles(file, path,
+          rel.fileFormat.isSplitable(session, rel.options, path), maxSplit, part.values)
+      }
+    }.toVector.sortBy(-_.length)
+    Some(FilePartition.getFilePartitions(session, splits, maxSplit).size <= 1)
+  }
+}
+
+/** Literal hoisting. A literal in a filter is inlined into the generated
+  * Java source, so each new key of a lookup template compiles its
+  * classes afresh. This rule swaps the non-null integral, floating,
+  * date and timestamp literals that are direct children of a
+  * [[BinaryComparison]] in a [[FilterExec]] condition for a
+  * [[HoistedLiteral]], which reads its value from the generated class's
+  * references array: the source repeats across keys and the code
+  * generator's cache serves it.
+  *
+  * Scans are not touched, so their data and pushed filters keep the
+  * literal and Parquet pushdown is unchanged; expressions that need a
+  * foldable argument (LIKE, regexp) are never operands of a comparison
+  * here. Run as a pre-columnar-transition rule, so it sees every stage
+  * before `CollapseCodegenStages`, with or without AQE. */
+object HoistFilterLiterals extends Rule[SparkPlan] {
+
+  private def hoistable(e: Expression): Boolean = e match {
+    case Literal(v, t) if v != null => t match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+          DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    case _ => false
+  }
+
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec =>
+      val c = f.condition.transformUp {
+        case b: BinaryComparison if b.children.exists(hoistable) =>
+          b.withNewChildren(b.children.map {
+            case l: Literal if hoistable(l) => HoistedLiteral(l.value, l.dataType)
+            case e => e
+          })
+      }
+      if (c fastEquals f.condition) f else f.copy(condition = c)
+  }
+}
+
+/** A non-null primitive constant whose generated code reads it from
+  * the references array instead of inlining it. Prints as the literal
+  * it replaced. Not foldable, so no rule folds it back into the source. */
+case class HoistedLiteral(value: Any, dataType: DataType) extends LeafExpression {
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hoisted", value, CodeGenerator.boxedType(dataType))
+    val unboxed = s"$ref.${CodeGenerator.javaType(dataType)}Value()"
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+      value = JavaCode.expression(unboxed, dataType))
+  }
+  override def toString: String = Literal(value, dataType).toString
+  override def sql: String = Literal(value, dataType).sql
+}
+
+/** Hands [[HoistFilterLiterals]] to the columnar-transition step. */
+object HoistFilterLiteralsColumnarRule extends ColumnarRule {
+  override def preColumnarTransitions: Rule[SparkPlan] = HoistFilterLiterals
+}

@@ -181,10 +181,11 @@ object IO {
     * (right for the many-small-partitions case; a jumbo partition
     * stays one file — split those by bucketing instead).
     *
-    * Swap discipline: the rewrite lands at `<path>.compacting` and
-    * only replaces the original after success, via rename — atomic on
-    * HDFS/local, NOT on object stores (there, compact into a table
-    * format's transaction log instead; this operator is the raw-
+    * Swap discipline: the rewrite lands at `<path>__staging` and
+    * only replaces the original after success, through [[swapInto]]
+    * (the swap `Incremental` and the hash-index compaction use too) —
+    * a rename, atomic on HDFS/local, NOT on object stores (there, compact into a
+    * table format's transaction log instead; this operator is the raw-
     * parquet fallback).
     *
     * @return (filesBefore, filesAfter) data-file counts. */
@@ -192,7 +193,7 @@ object IO {
       targetBytes: Long = 128L << 20,
       partitionCols: Seq[String] = Nil): (Int, Int) = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def dataFiles(d: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
       val it = fs.listFiles(d, true)
       val buf = scala.collection.mutable.ArrayBuffer
@@ -207,20 +208,15 @@ object IO {
     val before = dataFiles(p)
     val n = math.max(1,
       math.ceil(before.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val tmp = new Path(path + ".compacting")
-    fs.delete(tmp, true)
+    val staged = path + "__staging"
     val src = readParquet(spark, path)
     val w =
       if (partitionCols.nonEmpty)
         src.repartition(partitionCols.map(col): _*)
           .write.partitionBy(partitionCols: _*)
       else src.repartition(n).write
-    w.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val bak = new Path(path + ".precompact")
-    fs.delete(bak, true)
-    require(fs.rename(p, bak) && fs.rename(tmp, p),
-      s"compact swap failed for $path")
-    fs.delete(bak, true)
+    w.mode(SaveMode.Overwrite).parquet(staged)
+    swapInto(spark, staged, path)
     (before.size, dataFiles(p).size)
   }
 }

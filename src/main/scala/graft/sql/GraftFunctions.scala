@@ -1669,5 +1669,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // geo radius predicate → pushed bounding box + exact residual
     e.injectOptimizerRule(_ => graft.plans.RewriteStDWithin)
+    // interactive queries: one job, no per-key compile
+    e.injectQueryStagePrepRule(_ => graft.plans.ElideSinglePartitionShuffles)
+    e.injectColumnar(_ => graft.plans.HoistFilterLiteralsColumnarRule)
   }
 }

@@ -285,6 +285,23 @@ class IOSpec extends AnyFunSuite {
     assert(spark.read.parquet(part).count() === src.count())
   }
 
+  test("compact: a refused swap rename fails loudly, naming both paths; the rewrite survives staged") {
+    val src = spark.range(25).select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+    val path = tmp("graft-compact-refused") + "/t"
+    src.repartition(4).write.parquet(path)
+    // resolved per path under the session's conf, uncached, so the
+    // refusing file system serves exactly this compaction
+    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val e = try intercept[java.io.IOException](IO.compact(spark, path))
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(e.getMessage.contains(s"${path}__staging") &&
+      e.getMessage.contains(s"to $path"), e.getMessage)
+    val staged = spark.read.parquet(path + "__staging")
+    assert(staged.count() === 25 && staged.except(src).isEmpty && src.except(staged).isEmpty)
+  }
+
   test("fingerprint index append-only cycle: probe, fold kept back, next wave sees them as history") {
     import graft.operators.FingerprintIndex
     val hist = Seq((1L, "wave zero alpha"), (2L, "wave zero beta"))

@@ -267,6 +267,29 @@ class IncrementalSpec extends AnyFunSuite {
       .toSeq === Seq(1L, 2L))
   }
 
+  test("guarded CDC fold: schema drift either way fails loudly and leaves the table as it was") {
+    val path = tmp("graft-cdc-drift")
+    Incremental.applyChangesGuarded(spark,
+      Seq((1L, "a", 10, "I", 1L)).toDF("k", "v", "w", "op", "seq"), path, Seq("k"))
+    def live = Incremental.readCdcTable(spark, path).collect().toSeq
+    val before = live
+    // the batch lacks a base column: it would be dropped on the swap
+    val lacks = intercept[IllegalStateException](Incremental.applyChangesGuarded(spark,
+      Seq((2L, "b", "I", 2L)).toDF("k", "v", "op", "seq"), path, Seq("k")))
+    assert(lacks.getMessage.contains("drops [w]"), lacks.getMessage)
+    // the batch brings a column the base lacks
+    val adds = intercept[IllegalStateException](Incremental.applyChangesGuarded(spark,
+      Seq((2L, "b", 20, 2.5, "I", 2L)).toDF("k", "v", "w", "x", "op", "seq"), path, Seq("k")))
+    assert(adds.getMessage.contains("adds [x]"), adds.getMessage)
+    assert(live === before)
+    assert(!new java.io.File(path + "__tmp").exists())
+    // the same columns in another order still fold
+    Incremental.applyChangesGuarded(spark,
+      Seq((2L, 2L, "I", 20, "b")).toDF("seq", "k", "op", "w", "v"), path, Seq("k"))
+    assert(Incremental.readCdcTable(spark, path).select("k", "v", "w")
+      .as[(Long, String, Int)].collect().sorted.toSeq === Seq((1L, "a", 10), (2L, "b", 20)))
+  }
+
   test("NioLocalFileSystem sets the modes Hadoop's LocalFileSystem sets; the sticky bit falls back") {
     import java.nio.file.{Files, Paths}
     import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}

@@ -49,7 +49,10 @@ object SparkTestSession {
     val s = SparkSession.builder()
       .master("local[8]")
       .appName("graft-test")
+      // the functions and plan rules GraftSession.local ships
+      .withExtensions(new graft.sql.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")

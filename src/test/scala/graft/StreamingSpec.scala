@@ -1177,6 +1177,39 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("guarded streaming CDC sink: a drifted micro-batch fails the query loudly; the table stays") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sqlCtx = spark.sqlContext
+    /** The failure chain's messages when `feed` sends `stream` a batch
+      * for a table built from `base`. */
+    def drifted(base: org.apache.spark.sql.DataFrame, stream: org.apache.spark.sql.DataFrame,
+        feed: () => Unit, name: String): String = {
+      val path = java.nio.file.Files.createTempDirectory("graft-cdc-drift").toString + "/t"
+      graft.model.Incremental.applyChangesGuarded(spark, base, path, Seq("id"))
+      val before = graft.model.Incremental.readCdcTable(spark, path).collect().toSet
+      val q = StreamingOps.cdcSinkGuarded(stream, path, Seq("id"), name)
+      val e = try intercept[StreamingQueryException] {
+        feed(); q.processAllAvailable()
+      } finally q.stop()
+      assert(graft.model.Incremental.readCdcTable(spark, path).collect().toSet === before)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    }
+    // the stream lacks a base column
+    val narrow = MemoryStream[(Long, String, String, Long)]
+    val lacks = drifted(Seq((1L, "a", 10, "I", 1L)).toDF("id", "v", "w", "op", "seq"),
+      narrow.toDF().toDF("id", "v", "op", "seq"),
+      () => narrow.addData((2L, "b", "I", 2L)), "cdc_drift_lacks")
+    assert(lacks.contains("drops [w]"), lacks)
+    // the stream brings a column the base lacks
+    val wide = MemoryStream[(Long, String, Int, String, Long)]
+    val adds = drifted(Seq((1L, "a", "I", 1L)).toDF("id", "v", "op", "seq"),
+      wide.toDF().toDF("id", "v", "w", "op", "seq"),
+      () => wide.addData((2L, "b", 20, "I", 2L)), "cdc_drift_adds")
+    assert(adds.contains("adds [w]"), adds)
+  }
+
   test("Runner.build runs dbt-style checks in DAG order and aborts on failure") {
     import graft.model._
     val wh = java.nio.file.Files.createTempDirectory("graft-build").toString
