@@ -30,10 +30,23 @@ object Incremental {
     IO.readParquet(spark, path)
   }
 
-  /** Whether `path` exists on its own file system. */
+  /** Whether the table at `path` exists on its own file system. A
+    * missing `path` beside a complete staged copy (`<path>__tmp` or
+    * `<path>__staging` holding `_SUCCESS`) is a swap that stopped
+    * between its delete and its rename ([[IO.swapInto]]): taken for a
+    * first run, a fold would bootstrap a new table from its batch alone
+    * and lose every earlier row, so this fails naming both paths. */
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) || {
+      Seq("__tmp", "__staging").map(s => new Path(path + s))
+        .find(s => fs.exists(new Path(s, "_SUCCESS")))
+        .foreach { s => throw new java.io.IOException(s"table $p is missing but a " +
+          s"complete staged copy is at $s: an earlier swap stopped between its delete " +
+          s"and its rename; move $s to $p to keep that copy, or delete it to start over") }
+      false
+    }
   }
 
   /** dbt incremental with merge semantics: rows in `batch` replace

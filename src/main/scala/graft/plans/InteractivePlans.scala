@@ -75,7 +75,7 @@ object ElideSinglePartitionShuffles extends Rule[SparkPlan] {
     case _: ProjectExec | _: FilterExec | _: SortExec | _: BaseAggregateExec |
         _: WindowExec | _: WindowGroupLimitExec | _: LocalLimitExec |
         _: GlobalLimitExec | _: SampleExec | _: WriteFilesExec |
-        _: DataWritingCommandExec =>
+        _: DataWritingCommandExec | _: TemplateHitExec =>
       single(p.children.head)
     case _: CollectLimitExec | _: TakeOrderedAndProjectExec =>
       single(p.children.head).map(_ => true)
@@ -128,7 +128,10 @@ object ElideSinglePartitionShuffles extends Rule[SparkPlan] {
   * before `CollapseCodegenStages`, with or without AQE. */
 object HoistFilterLiterals extends Rule[SparkPlan] {
 
-  private def hoistable(e: Expression): Boolean = e match {
+  /** A literal this rule (and [[TemplateCache]]'s key) lifts out of a
+    * comparison: non-null and of a primitive numeric, date or
+    * timestamp type. */
+  private[plans] def hoistable(e: Expression): Boolean = e match {
     case Literal(v, t) if v != null => t match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
           DateType | TimestampType | TimestampNTZType => true
@@ -142,7 +145,7 @@ object HoistFilterLiterals extends Rule[SparkPlan] {
       val c = f.condition.transformUp {
         case b: BinaryComparison if b.children.exists(hoistable) =>
           b.withNewChildren(b.children.map {
-            case l: Literal if hoistable(l) => HoistedLiteral(l.value, l.dataType)
+            case l: Literal if hoistable(l) => HoistedLiteral(l)
             case e => e
           })
       }
@@ -150,21 +153,40 @@ object HoistFilterLiterals extends Rule[SparkPlan] {
   }
 }
 
-/** A non-null primitive constant whose generated code reads it from
-  * the references array instead of inlining it. Prints as the literal
-  * it replaced. Not foldable, so no rule folds it back into the source. */
-case class HoistedLiteral(value: Any, dataType: DataType) extends LeafExpression {
+/** A non-null primitive operand that generated code reads from the
+  * generated class's references array instead of inlining it. Two
+  * kinds share it: a filter literal hoisted by [[HoistFilterLiterals]],
+  * whose slot holds that literal for good, and a parameter of a
+  * [[TemplateCache]] template, whose slot is bound to the current
+  * query's value before each run. The slot, not a value, goes into the
+  * references, and the task closure that carries them is serialized
+  * per job, so each run reads the value bound when its job started.
+  *
+  * Prints as the literal its slot holds. Not foldable, so no rule folds
+  * it back into the source, and a scan never turns it into a pushed or
+  * partition filter (those translate only [[Literal]]s). Two are equal
+  * only when they share a slot (slots compare by identity). */
+case class HoistedLiteral(slot: ParamSlot, dataType: DataType)
+    extends LeafExpression {
   override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = value
+  override def eval(input: InternalRow): Any = slot.value
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hoisted", value, CodeGenerator.boxedType(dataType))
-    val unboxed = s"$ref.${CodeGenerator.javaType(dataType)}Value()"
+    val ref = ctx.addReferenceObj("slot", slot, classOf[ParamSlot].getName)
+    val unboxed = s"((${CodeGenerator.boxedType(dataType)}) $ref.value())." +
+      s"${CodeGenerator.javaType(dataType)}Value()"
     ev.copy(code = EmptyBlock, isNull = FalseLiteral,
       value = JavaCode.expression(unboxed, dataType))
   }
-  override def toString: String = Literal(value, dataType).toString
-  override def sql: String = Literal(value, dataType).sql
+  override def toString: String = Literal(slot.value, dataType).toString
+  override def sql: String = Literal(slot.value, dataType).sql
 }
+
+object HoistedLiteral {
+  def apply(l: Literal): HoistedLiteral = HoistedLiteral(new ParamSlot(l.value), l.dataType)
+}
+
+/** The value a [[HoistedLiteral]] reads; compared by identity. */
+final class ParamSlot(@volatile var value: Any) extends Serializable
 
 /** Hands [[HoistFilterLiterals]] to the columnar-transition step. */
 object HoistFilterLiteralsColumnarRule extends ColumnarRule {

@@ -267,6 +267,43 @@ class IncrementalSpec extends AnyFunSuite {
       .toSeq === Seq(1L, 2L))
   }
 
+  test("swap recovery: a missing table beside a complete staged copy fails loudly, losing nothing") {
+    val path = tmp("graft-swap-recovery")
+    def batch(k: Long, seq: Long) = Seq((k, s"v$k", "I", seq)).toDF("k", "v", "op", "seq")
+    Incremental.applyChangesGuarded(spark, batch(1L, 1L), path, Seq("k"))
+    Incremental.applyChangesGuarded(spark, batch(2L, 2L), path, Seq("k"))
+    // a swap that stopped after its delete: the live table is gone and
+    // the complete new one is at __tmp
+    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try intercept[java.io.IOException](
+      Incremental.applyChangesGuarded(spark, batch(3L, 3L), path, Seq("k")))
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(!new java.io.File(path).exists())
+    def staged(s: String) = spark.read.parquet(path + s).select("k").as[Long].collect().sorted.toSeq
+    // the next fold used to bootstrap a new table from its batch alone
+    val e = intercept[java.io.IOException](
+      Incremental.applyChangesGuarded(spark, batch(4L, 4L), path, Seq("k")))
+    assert(e.getMessage.contains(s"table $path is missing") &&
+      e.getMessage.contains(s"${path}__tmp"), e.getMessage)
+    assert(!new java.io.File(path).exists())
+    assert(staged("__tmp") === Seq(1L, 2L, 3L))
+    // a compaction's __staging copy is guarded the same way, in every fold
+    assert(new java.io.File(path + "__tmp").renameTo(new java.io.File(path + "__staging")))
+    val e2 = intercept[java.io.IOException](Incremental.applyChanges(spark,
+      batch(4L, 4L), path, Seq("k")))
+    assert(e2.getMessage.contains(s"${path}__staging"), e2.getMessage)
+    intercept[java.io.IOException](Incremental.merge(spark,
+      Seq((4L, "v4")).toDF("k", "v"), path, Seq("k")))
+    assert(staged("__staging") === Seq(1L, 2L, 3L))
+    // an incomplete staged copy (no _SUCCESS) is no table: a first run
+    assert(new java.io.File(path + "__staging/_SUCCESS").delete())
+    Incremental.applyChangesGuarded(spark, batch(5L, 5L), path, Seq("k"))
+    assert(Incremental.readCdcTable(spark, path).select("k").as[Long].collect().toSeq ===
+      Seq(5L))
+  }
+
   test("guarded CDC fold: schema drift either way fails loudly and leaves the table as it was") {
     val path = tmp("graft-cdc-drift")
     Incremental.applyChangesGuarded(spark,
