@@ -24,18 +24,18 @@ import graft.sql.GraftExtensions
   *       compared in a `Filter` are read from the generated class's
   *       references, so a template's new key reuses its compiled
   *       code; scans and their pushed filters keep the literal
-  *  - the template cache ([[graft.plans.TemplateCache]]), installed as
-  *    the session's planner strategy: keyed by the canonical optimized
-  *    plan with those filter literals masked; from the second sighting
-  *    of a key, a copy with the literals as slots is executed to an RDD
-  *    once, and each later `collect()` binds its values and runs that RDD
-  *    as one job. Admits deterministic plans over file sources with no
-  *    subquery, command or user code whose copy is one stage and whose
-  *    scans filter no partition column on a slot; a template serves one
-  *    query at a time and only while the session's SQL conf and every
-  *    scan's file listing are as they were at build time. Slots are not
-  *    pushed into Parquet, so a hit reads every row group of its
-  *    (one-partition) inputs
+  *     - the template cache ([[graft.plans.TemplateCache]]), a planner
+  *       strategy with one cache per session: keyed by the canonical
+  *       optimized plan with those filter literals masked; from the
+  *       second sighting of a key, a copy with the literals as slots is
+  *       executed to an RDD once, and each later `collect()` binds its
+  *       values and runs that RDD as one job. Admits deterministic plans
+  *       over file sources with no subquery, command or user code whose
+  *       copy is one stage and whose scans filter no partition column on
+  *       a slot; a template serves one query at a time and only while
+  *       the session's SQL conf and every scan's file listing are as
+  *       they were at build time. Slots are not pushed into Parquet, so
+  *       a hit reads every row group of its (one-partition) inputs
   *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
   *    local file system with permissions set through java.nio instead
   *    of a forked `chmod` per directory, part file and `.crc` (no
@@ -62,7 +62,6 @@ object GraftSession {
         classOf[graft.sources.NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.TemplateCache.install(s)
     s
   }
 }

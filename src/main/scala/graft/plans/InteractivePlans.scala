@@ -165,7 +165,11 @@ object HoistFilterLiterals extends Rule[SparkPlan] {
   * Prints as the literal its slot holds. Not foldable, so no rule folds
   * it back into the source, and a scan never turns it into a pushed or
   * partition filter (those translate only [[Literal]]s). Two are equal
-  * only when they share a slot (slots compare by identity). */
+  * only when they share a slot (slots compare by identity); a hoisted
+  * literal canonicalizes as the literal it replaced, so two plans with
+  * the same hoisted filter still compare equal for exchange and
+  * subquery reuse, while a template parameter stands for its position
+  * alone. */
 case class HoistedLiteral(slot: ParamSlot, dataType: DataType)
     extends LeafExpression {
   override def nullable: Boolean = false
@@ -179,14 +183,19 @@ case class HoistedLiteral(slot: ParamSlot, dataType: DataType)
   }
   override def toString: String = Literal(slot.value, dataType).toString
   override def sql: String = Literal(slot.value, dataType).sql
+  override lazy val canonicalized: Expression =
+    if (slot.fixed) Literal(slot.value, dataType) else this
 }
 
 object HoistedLiteral {
-  def apply(l: Literal): HoistedLiteral = HoistedLiteral(new ParamSlot(l.value), l.dataType)
+  def apply(l: Literal): HoistedLiteral =
+    HoistedLiteral(new ParamSlot(l.value, fixed = true), l.dataType)
 }
 
-/** The value a [[HoistedLiteral]] reads; compared by identity. */
-final class ParamSlot(@volatile var value: Any) extends Serializable
+/** The value a [[HoistedLiteral]] reads; compared by identity. A fixed
+  * slot holds a hoisted literal and is never rebound. */
+final class ParamSlot(@volatile var value: Any, val fixed: Boolean = false)
+  extends Serializable
 
 /** Hands [[HoistFilterLiterals]] to the columnar-transition step. */
 object HoistFilterLiteralsColumnarRule extends ColumnarRule {

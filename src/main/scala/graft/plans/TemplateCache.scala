@@ -55,7 +55,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
   * A slot is never pushed into the Parquet reader, so a hit reads every
   * row group of its files; eligible scans read one partition, which
   * bounds that loss. */
-final class TemplateCache private (session: SparkSession) extends SparkStrategy {
+final class TemplateCache private (session: SparkSession) extends ColumnarRule {
   import TemplateCache._
 
   private val spark = session.asInstanceOf[classic.SparkSession]
@@ -68,13 +68,10 @@ final class TemplateCache private (session: SparkSession) extends SparkStrategy 
   val hits = new AtomicLong
   val builds = new AtomicLong
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // a cloned session copies its parent's strategies: serve only ours
-    case root @ ReturnAnswer(query)
-        if SparkSession.getActiveSession.contains(session) && admissible(query) =>
-      serve(root, query)
-    case _ => Nil
-  }
+  /** `root` planned from a template, or Nil to plan it as without the
+    * cache. */
+  private def plan(root: ReturnAnswer): Seq[SparkPlan] =
+    if (admissible(root.child)) serve(root, root.child) else Nil
 
   private def serve(root: ReturnAnswer, query: LogicalPlan): Seq[SparkPlan] = {
     val (masked, params) = mask(query, keySlot)
@@ -174,8 +171,10 @@ final class TemplateCache private (session: SparkSession) extends SparkStrategy 
 }
 
 object TemplateCache {
-  /** Keys kept per session. */
-  private val Capacity = 64
+  /** Keys kept per session. The 360-query Verify corpus meets more
+    * than 256 keys per pass, so a smaller bound, cycled through in
+    * order, would evict every key before its next use. */
+  private val Capacity = 1024
 
   private type Fingerprint = (Map[String, String], Seq[Seq[(Path, Long, Long)]])
 
@@ -185,15 +184,25 @@ object TemplateCache {
   private final case class Refused(fp: Fingerprint) extends State
   private final case class Built(fp: Fingerprint, template: Template) extends State
 
-  /** The cache of `session`, installed as its first extra planning
-    * strategy (once; [[graft.GraftSession.local]] installs it). It lives
-    * and dies with the session. */
-  def install(session: SparkSession): TemplateCache = session.synchronized {
-    val exp = session.experimental
-    exp.extraStrategies.collectFirst { case t: TemplateCache => t }.getOrElse {
-      val t = new TemplateCache(session)
-      exp.extraStrategies = t +: exp.extraStrategies
-      t
+  /** A new, empty cache for `session`. [[graft.sql.GraftExtensions]]
+    * injects it as a columnar rule that changes nothing: Spark builds a
+    * session's columnar rules once per session state but its planner
+    * strategies on every planning, so held there the cache lives and
+    * dies with its session, and a cloned session starts with its own. */
+  def apply(session: SparkSession): TemplateCache = new TemplateCache(session)
+
+  /** The cache of `session`, if it was built with
+    * [[graft.sql.GraftExtensions]]. */
+  def of(session: SparkSession): Option[TemplateCache] =
+    session.asInstanceOf[classic.SparkSession].sessionState.columnarRules
+      .collectFirst { case t: TemplateCache => t }
+
+  /** The planner strategy [[graft.sql.GraftExtensions]] injects: plans
+    * a query's root through the cache of `session`. */
+  final class Serve(session: SparkSession) extends SparkStrategy {
+    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case root: ReturnAnswer => of(session).fold(Seq.empty[SparkPlan])(_.plan(root))
+      case _ => Nil
     }
   }
 

@@ -1672,5 +1672,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // interactive queries: one job, no per-key compile
     e.injectQueryStagePrepRule(_ => graft.plans.ElideSinglePartitionShuffles)
     e.injectColumnar(_ => graft.plans.HoistFilterLiteralsColumnarRule)
+    // repeated lookup templates: one retained RDD, the new key bound
+    e.injectColumnar(graft.plans.TemplateCache(_))
+    e.injectPlannerStrategy(new graft.plans.TemplateCache.Serve(_))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.HoistedLiteral
@@ -239,5 +239,28 @@ class InteractivePlansSpec extends AnyFunSuite {
     assert(conditions(spark).nonEmpty && conditions(spark) === conditions(plain))
     val cond = filters.head.condition.toString.replaceAll("#\\d+L?", "")
     assert(cond.contains("o_custkey = 17") && cond.contains("o_totalprice >= 12.5"), cond)
+  }
+
+  test("with AQE off, equal exchanges above a hoisted filter are still reused") {
+    tables
+    val side = "SELECT o_custkey, count(*) AS n FROM orders2 WHERE o_totalprice > 100 " +
+      "GROUP BY o_custkey"
+    val sql = s"SELECT a.o_custkey, a.n, b.n AS m FROM ($side) a JOIN ($side) b " +
+      "ON a.o_custkey = b.o_custkey"
+    def run(s: SparkSession): (Seq[String], Int) = withoutBroadcast(s) {
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val df = s.sql(sql)
+        val got = df.collect().map(_.toString).toSeq.sorted
+        val plan = df.queryExecution.executedPlan
+        assert(plan.exists(_.isInstanceOf[FilterExec]), plan)
+        (got, plan.collect { case r: ReusedExchangeExec => r }.size)
+      } finally s.conf.unset("spark.sql.adaptive.enabled")
+    }
+    val (got, reused) = run(spark)
+    val (want, plainReused) = run(plain)
+    assert(plainReused === 1)
+    assert(reused === plainReused)
+    assert(got.nonEmpty && got === want)
   }
 }

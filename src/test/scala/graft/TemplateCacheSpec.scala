@@ -12,18 +12,15 @@ import graft.sql.BigQueryDialect
 /** The session's template cache: a repeated lookup template runs its
   * retained RDD with the new key bound, one job, the same rows. */
 class TemplateCacheSpec extends AnyFunSuite {
-  private lazy val base = SparkTestSession.get
-  /** A session of the suite's context with the cache installed, as
-    * `GraftSession.local` installs it. */
-  lazy val spark: SparkSession = base.newSession()
-  private lazy val cache = TemplateCache.install(spark)
+  lazy val spark: SparkSession = SparkTestSession.get
+  private lazy val cache = TemplateCache.of(spark).get
 
   /** A session on the same context without GraftExtensions: no cache. */
   private lazy val plain: SparkSession = {
     cache
     val s = SparkSession.builder().create()
-    SparkSession.setActiveSession(base)
-    SparkSession.setDefaultSession(base)
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
     s
   }
 
@@ -113,6 +110,14 @@ class TemplateCacheSpec extends AnyFunSuite {
         assert(got === rows(plain, sql), sql)
       }
     }
+  }
+
+  test("each session has a cache of its own, and a session without GraftExtensions none") {
+    tables
+    val other = spark.newSession()
+    assert(TemplateCache.of(other).exists(_ ne cache))
+    assert(TemplateCache.of(plain).isEmpty)
+    SparkSession.setActiveSession(spark)
   }
 
   test("two threads running one template with different keys each get their own rows") {

@@ -18,7 +18,7 @@ object VerifyTwoPass {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.lift(2).map(_.split(",").toSet)
     val spark = GraftSession.local(appName = "graft-verify-two-pass")
-    val cache = TemplateCache.install(spark)
+    val cache = TemplateCache.of(spark).get
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     def pass(n: Int): Map[String, Seq[String]] = {
