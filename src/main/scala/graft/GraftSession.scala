@@ -35,7 +35,24 @@ import graft.sql.GraftExtensions
   *       a slot; a template serves one query at a time and only while
   *       the session's SQL conf and every scan's file listing are as
   *       they were at build time. Slots are not pushed into Parquet, so
-  *       a hit reads every row group of its (one-partition) inputs
+  *       a hit reads every row group of its (one-partition) inputs. A
+  *       key whose fingerprint changed at 3 sightings in a row without a
+  *       build is volatile: planned without the cache, unfingerprinted
+  *     - the statement key of the same cache, through an injected
+  *       parser: a `spark.sql` statement without parameters is keyed by
+  *       its parse tree with the numeric/date/timestamp operands of
+  *       comparisons, `IN`, `BETWEEN` and arithmetic in `WHERE`/`HAVING`
+  *       masked, plus the current catalog and database; from the second
+  *       sighting the masked tree is analyzed and optimized once with
+  *       typed slots, and each hit returns an already-analyzed leaf
+  *       whose `collect()` runs the retained RDD (no analysis,
+  *       optimization or planning). Validated per sighting: SQL conf,
+  *       the named temporary views (identity, file listing) and called
+  *       functions (identity); only file-source temporary views,
+  *       built-in or temporary functions, no cached data. A refused or
+  *       failed build plans the statement as before. A DataFrame built
+  *       on a served statement plans the statement in full under an
+  *       opaque leaf, so its filters are not pushed into the scans
   *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
   *    local file system with permissions set through java.nio instead
   *    of a forked `chmod` per directory, part file and `.crc` (no

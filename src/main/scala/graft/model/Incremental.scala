@@ -27,7 +27,8 @@ object Incremental {
     val tmp = path + "__tmp"
     df.write.mode("overwrite").parquet(tmp)
     IO.swapInto(spark, tmp, path)
-    IO.readParquet(spark, path)
+    // the schema just written, not a footer read back
+    spark.read.schema(df.schema).parquet(path)
   }
 
   /** Whether the table at `path` exists on its own file system. A
@@ -191,9 +192,10 @@ object Incremental {
     * the batch each read as one partition (files of ~4 MB or less),
     * [[graft.plans.ElideSinglePartitionShuffles]] drops both exchanges
     * and the write is the fold's one job. No job resolves a
-    * schema: the base read and the swap-write's re-read take theirs
-    * from a footer on the driver ([[graft.sources.IO.readParquet]]),
-    * where a schema-less `spark.read.parquet` would add one job each. */
+    * schema: the base read takes its from a footer on the driver
+    * ([[graft.sources.IO.readParquet]]) and the swap-write's re-read
+    * the schema it wrote, where a schema-less `spark.read.parquet`
+    * would add one job each. */
   def applyChangesGuarded(spark: SparkSession, changes: DataFrame,
       path: String, uniqueKey: Seq[String], opCol: String = "op",
       seqCol: String = "seq"): DataFrame = {

@@ -153,7 +153,7 @@ object HoistFilterLiterals extends Rule[SparkPlan] {
   }
 }
 
-/** A non-null primitive operand that generated code reads from the
+/** A non-null numeric, date or timestamp operand that generated code reads from the
   * generated class's references array instead of inlining it. Two
   * kinds share it: a filter literal hoisted by [[HoistFilterLiterals]],
   * whose slot holds that literal for good, and a parameter of a
@@ -176,10 +176,13 @@ case class HoistedLiteral(slot: ParamSlot, dataType: DataType)
   override def eval(input: InternalRow): Any = slot.value
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("slot", slot, classOf[ParamSlot].getName)
-    val unboxed = s"((${CodeGenerator.boxedType(dataType)}) $ref.value())." +
-      s"${CodeGenerator.javaType(dataType)}Value()"
+    val javaType = CodeGenerator.javaType(dataType)
+    val value =
+      if (CodeGenerator.isPrimitiveType(dataType))
+        s"((${CodeGenerator.boxedType(dataType)}) $ref.value()).${javaType}Value()"
+      else s"(($javaType) $ref.value())"
     ev.copy(code = EmptyBlock, isNull = FalseLiteral,
-      value = JavaCode.expression(unboxed, dataType))
+      value = JavaCode.expression(value, dataType))
   }
   override def toString: String = Literal(slot.value, dataType).toString
   override def sql: String = Literal(slot.value, dataType).sql

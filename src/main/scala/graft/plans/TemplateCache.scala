@@ -8,8 +8,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, UnresolvedFunction,
+  UnresolvedHaving, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.parser.{NamedParameterContext, ParameterContext,
+  ParserInterface, PositionalParameterContext}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.classic
@@ -19,25 +24,47 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.types._
 
 /** Session-level cache of interactive query templates. A lookup that
   * differs from an earlier one only in the numbers or dates it compares
   * against runs the earlier one's retained RDD with its own values
   * bound, so it skips RDD construction, closure cleaning, the scan's
-  * Hadoop-configuration broadcast and code generation.
+  * Hadoop-configuration broadcast and code generation. Two keys lead to
+  * a template:
   *
-  *  - Key: the canonical form of the optimized plan with every literal
-  *    [[HoistFilterLiterals]] would hoist (non-null numeric, date and
-  *    timestamp operands of a comparison in a `Filter`) masked.
+  *  - Plan key (DataFrame queries, and statements the statement key
+  *    refuses): the canonical form of the optimized plan with every
+  *    literal [[HoistFilterLiterals]] would hoist (non-null numeric,
+  *    date and timestamp operands of a comparison in a `Filter`)
+  *    masked. A hit plans as it always does, under a [[TemplateHitExec]]
+  *    root whose `executeCollect` binds the query's values into the
+  *    slots and runs the retained RDD as one job; every other action
+  *    runs the plan beneath it.
+  *  - Statement key (`SparkSession.sql`, through [[TemplateCache.Parser]]):
+  *    the parse tree with the non-null numeric, date and timestamp
+  *    literals that are direct operands of a comparison, an `IN` list,
+  *    a `BETWEEN` or arithmetic in a `WHERE` or `HAVING` condition
+  *    masked, plus the current catalog and namespace. Only statements
+  *    over file-source temporary views (views of a DataFrame) and
+  *    built-in or temporary functions qualify, and none while the
+  *    session caches any data. A hit returns an already-analyzed
+  *    [[ServedStatement]] leaf, so analysis, optimization and planning
+  *    of the statement are skipped; its `executeCollect` runs the
+  *    retained RDD, and a DataFrame built on it, or any other action,
+  *    plans the statement in full beneath it.
+  *
+  * Both keys share the rest:
   *  - Build: the second time a key is seen with the same session SQL
-  *    conf and the same file listing of every scan, a copy of the
-  *    optimized plan whose masked literals are [[HoistedLiteral]] slots
-  *    is planned and executed to an RDD, once.
-  *  - Hit: the query plans as it always does, under a
-  *    [[TemplateHitExec]] root whose `executeCollect` binds the query's
-  *    values into the slots and runs the retained RDD as one job; every
-  *    other action runs the plan beneath it. No result is reused: each
-  *    hit scans its input.
+  *    conf, the same file listing of every scan (and, for a statement,
+  *    the same temporary views and function definitions), a copy whose
+  *    masked literals are typed, non-foldable [[HoistedLiteral]] slots
+  *    is planned and executed to an RDD, once. A statement's copy is
+  *    analyzed and optimized with its slots, so it is correct for any
+  *    value of their types; it is kept only if it reads no clock or
+  *    session variable, coerces no integral slot to a decimal (whose
+  *    precision Spark derives from a literal's value) and yields the
+  *    schema the statement itself analyzes to.
   *  - Eligible: deterministic plans over file-source leaves only, with
   *    no subquery, command, observed metrics or user code (UDFs and
   *    typed object operators, whose closures a retained RDD would keep
@@ -45,12 +72,15 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *    to a single stage (no exchange or query stage below the final
   *    adaptive plan's result stage, no shuffle in the RDD) and whose
   *    scans filter neither partitions, buckets nor file metadata on a
-  *    slot. Anything else plans exactly as without the cache.
+  *    slot. Anything else plans exactly as without the cache. No result
+  *    is reused: each hit scans its input.
   *  - Safety: a template serves one query at a time (a second one runs
-  *    its own plan), and only while the session's SQL conf and each
-  *    scan's listing (path, length, modification time of every file)
-  *    equal what they were when it was built. At most `Capacity` keys
-  *    per session are kept, least recently used first out.
+  *    its own plan), and only while what its build saw holds. A key
+  *    whose fingerprint changed at `VolatileAfter` sightings in a row
+  *    without a build (a table rewritten between reads) is volatile: it
+  *    plans as without the cache and is not fingerprinted again until
+  *    it leaves the cache. At most `Capacity` keys per session are
+  *    kept, least recently used first out.
   *
   * A slot is never pushed into the Parquet reader, so a hit reads every
   * row group of its files; eligible scans read one partition, which
@@ -59,104 +89,188 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
   import TemplateCache._
 
   private val spark = session.asInstanceOf[classic.SparkSession]
-  private val states = new java.util.LinkedHashMap[LogicalPlan, State](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[LogicalPlan, State]): Boolean =
+  private val states = new java.util.LinkedHashMap[AnyRef, State](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, State]): Boolean =
       size() > Capacity
   }
 
-  /** Runs served by a retained RDD, and templates built. */
+  /** Runs served by a retained RDD and templates built, under either
+    * key; the statement key's share of each; fingerprints taken; keys
+    * marked volatile. */
   val hits = new AtomicLong
   val builds = new AtomicLong
+  val statementHits = new AtomicLong
+  val statementBuilds = new AtomicLong
+  val fingerprints = new AtomicLong
+  val volatiles = new AtomicLong
 
   /** `root` planned from a template, or Nil to plan it as without the
     * cache. */
   private def plan(root: ReturnAnswer): Seq[SparkPlan] =
-    if (admissible(root.child)) serve(root, root.child) else Nil
-
-  private def serve(root: ReturnAnswer, query: LogicalPlan): Seq[SparkPlan] = {
-    val (masked, params) = mask(query, keySlot)
-    val key = masked.canonicalized
-    val fp = fingerprint(query)
-    // None: this query builds the template; a template being built (by
-    // another query, or by this thread planning its copy) plans as
-    // without the cache meanwhile
-    val known = states.synchronized {
-      Option(states.get(key)).filter(_.fp == fp) match {
-        case Some(Seen(_)) => states.put(key, Building(fp)); None
-        case Some(s) => Some(s)
-        case None => states.put(key, Seen(fp)); Some(Seen(fp))
+    if (!admissible(root.child)) Nil
+    else {
+      val query = root.child
+      val (masked, params) = mask(query, keySlot)
+      template(masked.canonicalized, Some(fingerprint(query)))(build(query, params)) match {
+        case Some(t) =>
+          TemplateHitExec(t, params, spark.sessionState.planner.SpecialLimits(root).head) :: Nil
+        case None => Nil
       }
     }
-    val state = known.getOrElse {
-      val built = try build(query, params) catch { case NonFatal(_) => None }
-      val done = built.fold[State](Refused(fp))(Built(fp, _))
-      states.synchronized(states.put(key, done))
-      done
-    }
-    state match {
-      case Built(_, t) =>
-        TemplateHitExec(t, params, spark.sessionState.planner.SpecialLimits(root).head) :: Nil
-      case _ => Nil
+
+  /** `parsed`, the parse tree of a `SparkSession.sql` statement, or a
+    * leaf served by its template. */
+  private def statement(parsed: LogicalPlan): LogicalPlan =
+    if (!statementShape(parsed) || !spark.sharedState.cacheManager.isEmpty) parsed
+    else try {
+      val (masked, params) = maskStatement(parsed, keySlot)
+      val catalogs = spark.sessionState.catalogManager
+      val key = StatementKey(normalized(masked), catalogs.currentCatalog.name,
+        catalogs.currentNamespace.toSeq)
+      template(key, statementFingerprint(parsed))(buildStatement(parsed, params)) match {
+        case Some(t) => ServedStatement(t, params, t.output.map(_.newInstance()), parsed)
+        case None => parsed
+      }
+    } catch { case NonFatal(_) => parsed }
+
+  /** The template `key` leads to, built by `build` at the second
+    * sighting with an unchanged fingerprint; None also when `fp` is
+    * None (the query does not qualify). */
+  private def template(key: AnyRef, fp: => Option[Fingerprint])(
+      build: => Option[Template]): Option[Template] = {
+    if (states.synchronized(states.get(key)) == Volatile) return None
+    fp.flatMap { fp =>
+      fingerprints.incrementAndGet()
+      // None: this query builds the template; a template being built
+      // (by another query, or by this thread planning its copy) plans
+      // as without the cache meanwhile
+      val known = states.synchronized {
+        states.get(key) match {
+          case Seen(`fp`, _) => states.put(key, Building(fp)); None
+          case s @ (Building(`fp`) | Refused(`fp`) | Built(`fp`, _)) => Some(s)
+          case Volatile => Some(Volatile)
+          case prior =>
+            val changes = prior match {
+              case null => 0
+              case Seen(_, n) => n + 1
+              case _ => 1
+            }
+            val next = if (changes < VolatileAfter) Seen(fp, changes) else {
+              volatiles.incrementAndGet()
+              Volatile
+            }
+            states.put(key, next)
+            Some(next)
+        }
+      }
+      known match {
+        case Some(Built(_, t)) => Some(t)
+        case Some(_) => None
+        case None =>
+          val built = try build catch { case NonFatal(_) => None }
+          states.synchronized(states.put(key, built.fold[State](Refused(fp))(Built(fp, _))))
+          built
+      }
     }
   }
 
-  private def admissible(query: LogicalPlan): Boolean = {
+  private def admissible(query: LogicalPlan, slotted: Boolean = false): Boolean = {
     val leaves = query.collectLeaves()
     leaves.nonEmpty && leaves.forall(fileSource) && !query.isStreaming &&
       query.deterministic && !query.exists {
         case _: Command | _: CollectMetrics | _: Tail | _: ObjectConsumer |
             _: ObjectProducer => true
         case p => p.expressions.exists(e => SubqueryExpression.hasSubquery(e) ||
-          e.exists(x => x.isInstanceOf[HoistedLiteral] || x.isInstanceOf[UserDefinedExpression]))
+          e.exists(x => (!slotted && x.isInstanceOf[HoistedLiteral]) ||
+            x.isInstanceOf[UserDefinedExpression]))
       }
   }
 
-  private def fileSource(p: LogicalPlan): Boolean = p match {
-    case l: LogicalRelation => l.relation match {
-      case r: HadoopFsRelation =>
-        r.location.isInstanceOf[PartitioningAwareFileIndex] && r.bucketSpec.isEmpty
-      case _ => false
-    }
-    case _ => false
-  }
-
   private def fingerprint(query: LogicalPlan): Fingerprint =
-    (spark.sessionState.conf.getAllConfs, query.collectLeaves().map {
-      case l: LogicalRelation =>
-        l.relation.asInstanceOf[HadoopFsRelation].location
-          .asInstanceOf[PartitioningAwareFileIndex].allFiles()
-          .map(f => (f.getPath, f.getLen, f.getModificationTime))
-      case _ => Nil
-    })
+    Fingerprint(spark.sessionState.conf.getAllConfs, query.collectLeaves().map(listing), Nil)
+
+  /** What a statement's template depends on beyond its key: the SQL
+    * conf, each temporary view it names (by identity) and that view's
+    * file listing, and each function it calls (by the identity of its
+    * builder). None when it names anything else: a catalog table, a
+    * view defined by SQL text or over a non-file source, a qualified
+    * or unknown function. */
+  private def statementFingerprint(parsed: LogicalPlan): Option[Fingerprint] = {
+    val catalog = spark.sessionState.catalog
+    val registry = spark.sessionState.functionRegistry
+    val resolver = spark.sessionState.conf.resolver
+    val ctes = parsed.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }.flatten
+    val views = parsed.collect {
+      case r: UnresolvedRelation if !(r.multipartIdentifier.size == 1 &&
+          ctes.exists(resolver(_, r.multipartIdentifier.head))) =>
+        if (r.multipartIdentifier.size != 1 || r.isStreaming) None
+        else catalog.getRawTempView(r.multipartIdentifier.head)
+          .filter(_.plan.exists(_.collectLeaves().forall(fileSource)))
+    }
+    val functions = parsed.flatMap(_.expressions.flatMap(_.collect {
+      case f: UnresolvedFunction =>
+        if (f.nameParts.size != 1) None
+        else registry.lookupFunctionBuilder(FunctionIdentifier(f.nameParts.head))
+    }))
+    if (!views.forall(_.isDefined) || !functions.forall(_.isDefined)) None
+    else Some(Fingerprint(spark.sessionState.conf.getAllConfs,
+      views.flatten.flatMap(_.plan.get.collectLeaves().map(listing)),
+      (views.flatten ++ functions.flatten).map(new Ref(_))))
+  }
 
   /** Plans a copy of `query` with its masked literals as slots, bound
     * to `params`, and executes it to an RDD if it is one stage. */
   private def build(query: LogicalPlan, params: Seq[Literal]): Option[Template] = {
     val slots = params.map(l => new ParamSlot(l.value))
     val (copy, _) = mask(query, slots)
-    outsideExecution {
-      val plan = new PlannedQuery(spark, copy).executedPlan
-      val initial = plan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      if (!oneStage(initial)) None
-      else {
-        val rdd = plan.execute()
-        // an adaptive plan's final plan runs as its result query stage
-        val done = plan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan match {
-            case r: ResultQueryStageExec => r.plan
-            case p => p
-          }
+    val t = execute(new PlannedQuery(spark, copy), slots, Nil, 0, statement = false)
+    t.foreach(_ => builds.incrementAndGet())
+    t
+  }
+
+  /** Analyzes, optimizes and plans a copy of the statement `parsed`
+    * with its masked literals as slots, bound to `params`, and executes
+    * it to an RDD if it qualifies. */
+  private def buildStatement(parsed: LogicalPlan, params: Seq[Literal]): Option[Template] = {
+    val slots = params.map(l => new ParamSlot(l.value))
+    val (copy, _) = maskStatement(parsed, slots)
+    val qe = new QueryExecution(spark, copy)
+    val analyzed = qe.analyzed
+    val ok = timeless(analyzed) && !decimalSlot(analyzed) &&
+      admissible(qe.optimizedPlan, slotted = true) &&
+      new QueryExecution(spark, parsed).analyzed.schema == analyzed.schema
+    val t = if (!ok) None
+      else execute(qe, slots, analyzed.output, qe.optimizedPlan.stats.sizeInBytes,
+        statement = true)
+    t.foreach { _ => builds.incrementAndGet(); statementBuilds.incrementAndGet() }
+    t
+  }
+
+  /** The template `qe` executes to, if its plan is one stage over
+    * fixed scans. */
+  private def execute(qe: QueryExecution, slots: Seq[ParamSlot], output: Seq[Attribute],
+      sizeInBytes: BigInt, statement: Boolean): Option[Template] = outsideExecution {
+    val plan = qe.executedPlan
+    val initial = plan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    if (!oneStage(initial)) None
+    else {
+      val rdd = plan.execute()
+      // an adaptive plan's final plan runs as its result query stage
+      val done = plan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan match {
+          case r: ResultQueryStageExec => r.plan
           case p => p
         }
-        if (!oneStage(done) || !fixedScans(done) || !narrow(rdd)) None
-        else {
-          builds.incrementAndGet()
-          Some(new Template(slots, rdd, hits))
-        }
+        case p => p
       }
+      if (!oneStage(done) || !fixedScans(done) || !narrow(rdd)) None
+      else Some(new Template(slots, rdd, done, output, sizeInBytes, () => {
+        hits.incrementAndGet()
+        if (statement) statementHits.incrementAndGet()
+      }))
     }
   }
 
@@ -176,13 +290,32 @@ object TemplateCache {
     * order, would evict every key before its next use. */
   private val Capacity = 1024
 
-  private type Fingerprint = (Map[String, String], Seq[Seq[(Path, Long, Long)]])
+  /** Sightings in a row with a changed fingerprint and no build after
+    * which a key is volatile. */
+  private val VolatileAfter = 3
 
-  private sealed trait State { def fp: Fingerprint }
-  private final case class Seen(fp: Fingerprint) extends State
+  /** Compares by identity: a temporary view or function replaced under
+    * the same name is a new one. */
+  private final class Ref(val obj: AnyRef) {
+    override def equals(o: Any): Boolean = o match {
+      case r: Ref => r.obj eq obj
+      case _ => false
+    }
+    override def hashCode: Int = System.identityHashCode(obj)
+  }
+
+  private final case class Fingerprint(conf: Map[String, String],
+      files: Seq[Seq[(Path, Long, Long)]], refs: Seq[Ref])
+
+  private final case class StatementKey(tree: LogicalPlan, catalog: String,
+      namespace: Seq[String])
+
+  private sealed trait State
+  private final case class Seen(fp: Fingerprint, changes: Int) extends State
   private final case class Building(fp: Fingerprint) extends State
   private final case class Refused(fp: Fingerprint) extends State
   private final case class Built(fp: Fingerprint, template: Template) extends State
+  private case object Volatile extends State
 
   /** A new, empty cache for `session`. [[graft.sql.GraftExtensions]]
     * injects it as a columnar rule that changes nothing: Spark builds a
@@ -198,17 +331,56 @@ object TemplateCache {
       .collectFirst { case t: TemplateCache => t }
 
   /** The planner strategy [[graft.sql.GraftExtensions]] injects: plans
-    * a query's root through the cache of `session`. */
+    * a served statement as its [[ServedStatementExec]], and a query's
+    * root through the cache of `session`. */
   final class Serve(session: SparkSession) extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case ReturnAnswer(s: ServedStatement) => s.exec :: Nil
+      case s: ServedStatement => s.exec :: Nil
       case root: ReturnAnswer => of(session).fold(Seq.empty[SparkPlan])(_.plan(root))
       case _ => Nil
     }
   }
 
+  /** The session parser [[graft.sql.GraftExtensions]] injects: a
+    * `SparkSession.sql` statement without parameters goes through the
+    * cache's statement key; everything else (view text, `parseQuery`,
+    * expressions, identifiers) goes to `delegate` unchanged. */
+  final class Parser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
+    override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan = {
+      val parsed = delegate.parsePlanWithParameters(sqlText, ctx)
+      val bare = ctx match {
+        case p: PositionalParameterContext => p.params.isEmpty
+        case n: NamedParameterContext => n.params.isEmpty
+        case _ => false
+      }
+      if (!bare) parsed else of(session).fold(parsed)(_.statement(parsed))
+    }
+    override def parsePlan(sqlText: String): LogicalPlan = delegate.parsePlan(sqlText)
+    override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
+    override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
+    override def parseTableIdentifier(sqlText: String): TableIdentifier =
+      delegate.parseTableIdentifier(sqlText)
+    override def parseFunctionIdentifier(sqlText: String): FunctionIdentifier =
+      delegate.parseFunctionIdentifier(sqlText)
+    override def parseMultipartIdentifier(sqlText: String): Seq[String] =
+      delegate.parseMultipartIdentifier(sqlText)
+    override def parseRoutineParam(sqlText: String): StructType =
+      delegate.parseRoutineParam(sqlText)
+    override def parseTableSchema(sqlText: String): StructType =
+      delegate.parseTableSchema(sqlText)
+    override def parseDataType(sqlText: String): DataType = delegate.parseDataType(sqlText)
+  }
+
   // one shared slot per masked position, so keys of one template compare equal
   private val keySlots = new ConcurrentHashMap[Int, ParamSlot]()
   private def keySlot(i: Int): ParamSlot = keySlots.computeIfAbsent(i, _ => new ParamSlot(null))
+
+  private def slotFor(found: ArrayBuffer[Literal], slot: Int => ParamSlot,
+      l: Literal): HoistedLiteral = {
+    found += l
+    HoistedLiteral(slot(found.size - 1), l.dataType)
+  }
 
   /** `plan` with each literal [[HoistFilterLiterals]] would hoist from a
     * `Filter` replaced by a [[HoistedLiteral]] on `slot(i)`, numbered in
@@ -220,15 +392,106 @@ object TemplateCache {
         val c = f.condition.transformDown {
           case b: BinaryComparison if b.children.exists(HoistFilterLiterals.hoistable) =>
             b.withNewChildren(b.children.map {
-              case l: Literal if HoistFilterLiterals.hoistable(l) =>
-                found += l
-                HoistedLiteral(slot(found.size - 1), l.dataType)
+              case l: Literal if HoistFilterLiterals.hoistable(l) => slotFor(found, slot, l)
               case e => e
             })
         }
         if (c fastEquals f.condition) f else f.copy(condition = c)
     }
     (masked, found.toSeq)
+  }
+
+  /** Parse-tree nodes a served statement may consist of. */
+  private def statementShape(parsed: LogicalPlan): Boolean = !parsed.exists {
+    case _: Project | _: Filter | _: Sort | _: Aggregate | _: UnresolvedHaving |
+        _: SubqueryAlias | _: UnresolvedRelation | _: GlobalLimit | _: LocalLimit |
+        _: Distinct | _: Join | _: Union | _: UnresolvedWith | _: WithWindowDefinition =>
+      false
+    case _ => true
+  } && !parsed.exists(_.expressions.exists(SubqueryExpression.hasSubquery))
+
+  /** A statement literal the statement key masks: non-null and numeric,
+    * date or timestamp. */
+  private def maskable(e: Expression): Boolean = e match {
+    case Literal(v, t) if v != null => t match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+          _: DecimalType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    case _ => false
+  }
+
+  /** The parse tree `plan` with each maskable literal that is a direct
+    * operand of a comparison, an `IN` list, a `BETWEEN` or arithmetic in
+    * a `WHERE` or `HAVING` condition replaced by a [[HoistedLiteral]] on
+    * `slot(i)`, numbered in pre-order, and the literals it replaced. */
+  private def maskStatement(plan: LogicalPlan,
+      slot: Int => ParamSlot): (LogicalPlan, Seq[Literal]) = {
+    val found = ArrayBuffer.empty[Literal]
+    def condition(c: Expression): Expression = c.transformDown {
+      case e if e.children.exists(maskable) && (e match {
+          case _: BinaryComparison | _: In | _: BinaryArithmetic => true
+          case f: UnresolvedFunction => f.nameParts.map(_.toLowerCase) == Seq("between")
+          case _ => false
+        }) =>
+        e.withNewChildren(e.children.map {
+          case l: Literal if maskable(l) => slotFor(found, slot, l)
+          case x => x
+        })
+    }
+    val masked = plan.transformDown {
+      case f: Filter => f.copy(condition = condition(f.condition))
+      case h: UnresolvedHaving => h.copy(havingCondition = condition(h.havingCondition))
+    }
+    (masked, found.toSeq)
+  }
+
+  /** `plan` with every alias's expression id zeroed: two parses of one
+    * statement differ only in those. */
+  private def normalized(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case a: Alias => Alias(a.child, a.name)(ExprId(0), a.qualifier, a.explicitMetadata,
+      a.nonInheritableMetadataKeys)
+  }
+
+  /** Every leaf expression of `plan` is a column, a literal, a slot, a
+    * window marker or a reference to a common subexpression: nothing
+    * reads the clock, the session or a variable, whose value a template
+    * would keep. */
+  private def timeless(plan: LogicalPlan): Boolean = !plan.exists(_.expressions.exists(_.exists {
+    case _: Attribute | _: Literal | _: HoistedLiteral | _: SpecialFrameBoundary |
+        _: WindowFrame | _: AggregateWindowFunction | _: NamedLambdaVariable |
+        _: CommonExpressionRef => false
+    case e => e.children.isEmpty
+  }))
+
+  /** Whether an integral slot is coerced to a decimal: the analyzer
+    * types an integral literal there by its value's digits. */
+  private def decimalSlot(plan: LogicalPlan): Boolean = plan.exists(_.expressions.exists(_.exists {
+    case c: Cast => c.child.isInstanceOf[HoistedLiteral] &&
+      c.dataType.isInstanceOf[DecimalType] && (c.child.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      })
+    case _ => false
+  }))
+
+  private def fileSource(p: LogicalPlan): Boolean = p match {
+    case l: LogicalRelation => l.relation match {
+      case r: HadoopFsRelation =>
+        r.location.isInstanceOf[PartitioningAwareFileIndex] && r.bucketSpec.isEmpty
+      case _ => false
+    }
+    case _ => false
+  }
+
+  /** Path, length and modification time of every file a file-source
+    * leaf lists. */
+  private def listing(leaf: LogicalPlan): Seq[(Path, Long, Long)] = leaf match {
+    case l: LogicalRelation =>
+      l.relation.asInstanceOf[HadoopFsRelation].location
+        .asInstanceOf[PartitioningAwareFileIndex].allFiles()
+        .map(f => (f.getPath, f.getLen, f.getModificationTime)).toSeq
+    case _ => Nil
   }
 
   private def oneStage(plan: SparkPlan): Boolean = !plan.exists {
@@ -252,10 +515,12 @@ object TemplateCache {
   private[plans] val copyRows: Iterator[InternalRow] => Array[InternalRow] = _.map(_.copy()).toArray
 }
 
-/** A built template: the slots of its plan and the RDD that plan
-  * executed to. */
+/** A built template: the slots of its plan, the RDD that plan executed
+  * to, the plan itself (for EXPLAIN) and, for a statement, the output
+  * and size of its analyzed plan. */
 final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow],
-    hits: AtomicLong) {
+    plan: SparkPlan, private[plans] val output: Seq[Attribute],
+    private[plans] val sizeInBytes: BigInt, onRun: () => Unit) {
   private val busy = new AtomicBoolean
 
   /** The rows of one run with `params` bound, or None while another
@@ -264,9 +529,15 @@ final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow
     if (!busy.compareAndSet(false, true)) None
     else try {
       slots.zip(params).foreach { case (s, l) => s.value = l.value }
-      hits.incrementAndGet()
+      onRun()
       Some(rdd.sparkContext.runJob(rdd, TemplateCache.copyRows).flatten)
     } finally busy.set(false)
+
+  /** The template's plan with `params` in place of its slots. */
+  private[plans] def bound(params: Seq[Literal]): SparkPlan = {
+    val at = slots.zip(params).toMap
+    plan.transformAllExpressions { case h: HoistedLiteral if at.contains(h.slot) => at(h.slot) }
+  }
 }
 
 /** Root of a query served by a [[Template]]: `executeCollect` runs the
@@ -288,6 +559,37 @@ case class TemplateHitExec(@transient template: Template, params: Seq[Literal],
   override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
   override protected def doCanonicalize(): SparkPlan = child.canonicalized
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
+}
+
+/** A `SparkSession.sql` statement served by a [[Template]], returned by
+  * the parser already analyzed: `output` has the statement's schema,
+  * `params` its masked values and `statement` its parse tree. A
+  * DataFrame built on it sees an opaque relation: filters on it are not
+  * pushed into its scans. */
+case class ServedStatement(template: Template, params: Seq[Literal],
+    output: Seq[Attribute], statement: LogicalPlan) extends LeafNode with MultiInstanceRelation {
+  // born analyzed, so the analyzer returns it as it stands
+  override def analyzed: Boolean = true
+  override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
+  override def computeStats(): Statistics = Statistics(template.sizeInBytes)
+  override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
+  private[plans] def exec: SparkPlan = ServedStatementExec(template, params, output, statement)
+}
+
+/** Plans a [[ServedStatement]]. `executeCollect` runs its template with
+  * its `params`; every other action (and a collect that finds the
+  * template busy) runs the statement planned in full from its parse
+  * tree. EXPLAIN shows the template's plan with this statement's
+  * values. */
+case class ServedStatementExec(@transient template: Template, params: Seq[Literal],
+    output: Seq[Attribute], @transient statement: LogicalPlan) extends LeafExecNode {
+  @transient private lazy val planned: SparkPlan =
+    new QueryExecution(session, statement).executedPlan
+  override protected def doExecute(): RDD[InternalRow] = planned.execute()
+  override def executeCollect(): Array[InternalRow] =
+    template.run(params).getOrElse(planned.executeCollect())
+  override def innerChildren: Seq[QueryPlan[_]] = Seq(template.bound(params))
+  override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
 }
 
 /** Plans a logical plan that is already optimized, as it stands. */

@@ -1672,8 +1672,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // interactive queries: one job, no per-key compile
     e.injectQueryStagePrepRule(_ => graft.plans.ElideSinglePartitionShuffles)
     e.injectColumnar(_ => graft.plans.HoistFilterLiteralsColumnarRule)
-    // repeated lookup templates: one retained RDD, the new key bound
+    // repeated lookup templates: one retained RDD, the new key bound;
+    // a repeated SQL statement is served from its parse tree
     e.injectColumnar(graft.plans.TemplateCache(_))
     e.injectPlannerStrategy(new graft.plans.TemplateCache.Serve(_))
+    e.injectParser(new graft.plans.TemplateCache.Parser(_, _))
   }
 }

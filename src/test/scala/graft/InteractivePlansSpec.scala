@@ -215,25 +215,29 @@ class InteractivePlansSpec extends AnyFunSuite {
 
   test("hoisting leaves the scan's pushed filters and the printed literal as they were") {
     tables
-    def scanFilters(s: SparkSession, sql: String): Seq[String] = {
-      val df = s.sql(sql)
+    // a DataFrame, not SQL text: a repeated statement is served from its
+    // parse tree as a leaf, with no FilterExec of its own to inspect
+    def query(s: SparkSession): DataFrame = s.table("orders1").where(
+        col("o_custkey") === 17 && col("o_orderdate") > lit(java.sql.Date.valueOf("1994-01-01")) &&
+          col("o_totalprice") >= 12.5)
+      .select("o_orderkey")
+    def scanFilters(s: SparkSession): Seq[String] = {
+      val df = query(s)
       df.collect()
       finalPlan(df).collect { case f: FileSourceScanExec =>
         (f.metadata("PushedFilters") + " " + f.metadata("DataFilters"))
           .replaceAll("#\\d+", "") }
     }
-    val sql = "SELECT o_orderkey FROM orders1 WHERE o_custkey = 17 AND " +
-      "o_orderdate > DATE '1994-01-01' AND o_totalprice >= 12.5"
-    val pushed = scanFilters(spark, sql)
+    val pushed = scanFilters(spark)
     assert(pushed.nonEmpty && pushed.head.contains("EqualTo(o_custkey,17)"), pushed)
-    assert(pushed === scanFilters(plain, sql))
-    val df = spark.sql(sql)
+    assert(pushed === scanFilters(plain))
+    val df = query(spark)
     df.collect()
     val filters = finalPlan(df).collect { case f: FilterExec => f }
     assert(filters.size === 1)
     assert(filters.head.condition.collect { case h: HoistedLiteral => h }.size === 3)
     // EXPLAIN prints the filter exactly as without the rule
-    def conditions(s: SparkSession): Seq[String] = s.sql(sql).queryExecution
+    def conditions(s: SparkSession): Seq[String] = query(s).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       .linesIterator.filter(_.startsWith("Condition")).map(_.replaceAll("#\\d+", "")).toSeq
     assert(conditions(spark).nonEmpty && conditions(spark) === conditions(plain))

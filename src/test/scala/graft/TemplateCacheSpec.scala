@@ -1,16 +1,22 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{TemplateCache, TemplateHitExec}
+import graft.model.Incremental
+import graft.plans.{ServedStatement, TemplateCache, TemplateHitExec}
 import graft.sql.BigQueryDialect
 
 /** The session's template cache: a repeated lookup template runs its
-  * retained RDD with the new key bound, one job, the same rows. */
+  * retained RDD with the new key bound, one job, the same rows. A
+  * DataFrame lookup reaches it through its optimized plan, a SQL
+  * statement through its parse tree. */
 class TemplateCacheSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   private lazy val cache = TemplateCache.of(spark).get
@@ -59,11 +65,39 @@ class TemplateCacheSpec extends AnyFunSuite {
       s"AND $k + 9 QUALIFY row_number() OVER (PARTITION BY o_custkey " +
       "ORDER BY o_totalprice DESC, o_orderkey) = 1")
 
+  /** The same lookups as DataFrames, which only the plan key serves. */
+  private def pointDf(k: Long) = spark.table("tc_orders").where(col("o_custkey") === k)
+    .select("o_orderkey", "o_totalprice", "o_orderdate")
+  private def historyDf(k: Long) = spark.table("tc_orders").where(col("o_custkey") === k)
+    .select("o_orderkey", "o_orderdate", "o_totalprice")
+    .orderBy(col("o_orderdate").desc, col("o_orderkey"))
+  private def top1Df(k: Long) = spark.table("tc_orders")
+    .where(col("o_custkey").between(k, k + 9))
+    .withColumn("__rn", row_number().over(Window.partitionBy("o_custkey")
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
+    .where(col("__rn") === 1).select("o_custkey", "o_orderkey", "o_totalprice")
+
+  /** Served by the plan key (a [[TemplateHitExec]] root) or the
+    * statement key. */
   private def served(df: DataFrame): Boolean = {
     def root(p: SparkPlan) = p.isInstanceOf[TemplateHitExec]
-    df.queryExecution.executedPlan match {
+    statementServed(df) || (df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => root(a.inputPlan)
       case p => root(p)
+    })
+  }
+
+  private def statementServed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[ServedStatement]
+
+  /** Seeded Zipf(1.1) draws over the 2,000 customer keys. */
+  private def zipfKeys(n: Int, seed: Long): Seq[Long] = {
+    val w = (1 to 2000).map(i => 1.0 / math.pow(i, 1.1))
+    val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / w.sum)
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n) {
+      val u = rnd.nextDouble()
+      (cdf.indexWhere(_ >= u) max 0) + 1L
     }
   }
 
@@ -94,22 +128,69 @@ class TemplateCacheSpec extends AnyFunSuite {
 
   test("for 20 keys of each lookup shape a hit returns the plain session's rows in one job") {
     tables
-    for (shape <- Seq(point _, history _, top1 _)) {
-      val warm = shape(3L, "tc_orders")
-      rows(spark, warm); rows(spark, warm)
+    val shapes = Seq[(Long => DataFrame, Long => String)](
+      (pointDf, point(_)), (historyDf, history(_)), (top1Df, top1(_)))
+    for ((shape, sqlOf) <- shapes) {
+      shape(3L).collect(); shape(3L).collect()
       for (k <- 1L to 1981L by 104L) {
-        val sql = shape(k, "tc_orders")
-        val df = spark.sql(sql)
+        val df = shape(k)
         val before = cache.hits.get
         var got: Seq[String] = Nil
+        assert(jobsOf { got = df.collect().map(_.toString).toSeq } === 1, sqlOf(k))
+        assert(served(df) && !statementServed(df), sqlOf(k))
+        assert(cache.hits.get - before === 1, sqlOf(k))
+        assert(got.nonEmpty, sqlOf(k))
+        // same rows in the same order as the plain session's statement
+        assert(got === rows(plain, sqlOf(k)), sqlOf(k))
+      }
+    }
+  }
+
+  test("for 20 Zipf keys of each lookup shape a served statement returns the plain session's rows in one job") {
+    tables
+    for (shape <- Seq(point(_: Long, "tc_orders"), history(_: Long, "tc_orders"),
+        top1(_: Long, "tc_orders"))) {
+      rows(spark, shape(3L)); rows(spark, shape(3L))
+      for (k <- zipfKeys(20, seed = 7)) {
+        val sql = shape(k)
+        val df = spark.sql(sql)
+        assert(statementServed(df), sql)
+        val before = cache.statementHits.get
+        var got: Seq[String] = Nil
         assert(jobsOf { got = df.collect().map(_.toString).toSeq } === 1, sql)
-        assert(served(df), sql)
-        assert(cache.hits.get - before === 1, sql)
+        assert(cache.statementHits.get - before === 1, sql)
         assert(got.nonEmpty, sql)
-        // same rows in the same order as the plain session
         assert(got === rows(plain, sql), sql)
       }
     }
+  }
+
+  test("a served statement skips analysis, optimization and physical planning") {
+    tables
+    val sql = (k: Long) => history(k, "tc_orders")
+    rows(spark, sql(3L)); rows(spark, sql(4L))
+    def ms(body: => Any): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e6
+    }
+    /** Analysis (its tracker phase, which ran inside spark.sql, in whole
+      * ms), optimization and planning of `sql(k)` in `s`. */
+    def phases(s: SparkSession, k: Long): Seq[Double] = {
+      val df = s.sql(sql(k))
+      assert(statementServed(df) === (s eq spark), sql(k))
+      val qe = df.queryExecution
+      val analysis = qe.tracker.phases(QueryPlanningTracker.ANALYSIS).durationMs.toDouble
+      Seq(analysis, ms(qe.optimizedPlan), ms(qe.executedPlan))
+    }
+    // the first runs warm up the JIT; the lower quartile of the last
+    // 100, which other test JVMs' load inflates least
+    def quartiles(s: SparkSession) = (1L to 300L).map(phases(s, _)).drop(200).transpose
+      .map(t => t.sorted.apply(t.size / 4))
+    val served = quartiles(spark)
+    val unserved = quartiles(plain)
+    // the optimizer still runs its ~200 rule invocations over the leaf
+    assert(served.forall(_ < 1.0), s"served $served ms, without the cache $unserved ms")
   }
 
   test("each session has a cache of its own, and a session without GraftExtensions none") {
@@ -208,11 +289,179 @@ class TemplateCacheSpec extends AnyFunSuite {
       assert(!served(df), sql)
       assert(got.sorted === rows(plain, sql).sorted, sql)
     }
+    assert(cache.builds.get === builds)
+    // a statement's second parse builds its template before the action
+    // is known; a write runs the statement's own plan
     for (i <- 1 to 3) {
       spark.sql(point(40)).write.parquet(s"$dir/written$i")
       assert(spark.read.parquet(s"$dir/written$i").count() === rows(plain, point(40)).size)
     }
-    assert(cache.builds.get === builds)
     assert(cache.hits.get === hits)
+  }
+
+  test("USE of another database and a UDF registered under a called name miss or rebuild a served statement") {
+    tables
+    val s = spark.newSession()
+    val own = TemplateCache.of(s).get
+    s.read.parquet(s"$dir/orders").createOrReplaceTempView("tc_orders")
+    SparkSession.setActiveSession(spark)
+    def sql(k: Long) =
+      s"SELECT o_orderkey, abs(o_totalprice - 100) AS p FROM tc_orders WHERE o_custkey = $k"
+    /** Rows of `sql(k)` in `s`, checked against the plain session, and
+      * whether the statement key served them. */
+    def check(k: Long): Boolean = {
+      val before = own.statementHits.get
+      val got = s.sql(sql(k)).collect().map(_.toString).toSeq
+      assert(got === rows(plain, sql(k)), sql(k))
+      own.statementHits.get - before == 1
+    }
+    try {
+      check(1); check(2)
+      assert(check(3))
+      s.sql("CREATE DATABASE IF NOT EXISTS tc_other")
+      s.catalog.setCurrentDatabase("tc_other")
+      assert(!check(4))
+      assert(check(5))
+      s.catalog.setCurrentDatabase("default")
+      assert(check(6))
+      // a function of the same name replaces the one the template calls
+      s.udf.register("abs", (d: Double) => d + 1000.0)
+      for (k <- 7L to 9L) {
+        val df = s.sql(sql(k))
+        assert(!statementServed(df), sql(k))
+        val expected = s.table("tc_orders").where(col("o_custkey") === k)
+          .select(col("o_orderkey"), (col("o_totalprice") - 100 + 1000.0).as("p"))
+        assert(df.collect().toSeq === expected.collect().toSeq, sql(k))
+      }
+    } finally {
+      s.catalog.setCurrentDatabase("default")
+      s.sql("DROP DATABASE IF EXISTS tc_other")
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("current_date(), rand() and catalog-table statements are never served") {
+    tables
+    spark.read.parquet(s"$dir/orders").write.mode("overwrite").saveAsTable("tc_catalog_orders")
+    try {
+      val builds = cache.statementBuilds.get
+      val hits = cache.statementHits.get
+      val queries = Seq(
+        "SELECT o_orderkey FROM tc_orders WHERE o_custkey = 5 AND o_orderdate < current_date()",
+        "SELECT o_orderkey FROM tc_orders WHERE o_custkey = 5 AND rand(3) < 2.0",
+        "SELECT o_orderkey FROM tc_catalog_orders WHERE o_custkey = 5")
+      for (sql <- queries; _ <- 1 to 3) {
+        val df = spark.sql(sql)
+        assert(!statementServed(df), sql)
+        // the plain session has a catalog of its own: it reads the view
+        val same = sql.replace("tc_catalog_orders", "tc_orders")
+        assert(df.collect().map(_.toString).toSeq.sorted === rows(plain, same).sorted, sql)
+      }
+      assert(cache.statementBuilds.get === builds)
+      assert(cache.statementHits.get === hits)
+    } finally spark.sql("DROP TABLE IF EXISTS tc_catalog_orders")
+  }
+
+  test("int, bigint and decimal(3,1) literals key different statement templates") {
+    tables
+    val sqls = Seq[String => String](
+      v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = $v",
+      v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = ${v}L",
+      v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = $v.0")
+    val builds = cache.statementBuilds.get
+    def servedRows(sql: String): Boolean = {
+      val df = spark.sql(sql)
+      assert(df.collect().map(_.toString).toSeq === rows(plain, sql), sql)
+      statementServed(df)
+    }
+    // each type's first sighting misses, its second builds and serves
+    for (sql <- sqls) {
+      assert(!servedRows(sql("15")), sql("15"))
+      assert(servedRows(sql("16")), sql("16"))
+    }
+    assert(cache.statementBuilds.get - builds === 3)
+    for (sql <- sqls) assert(servedRows(sql("17")), sql("17"))
+  }
+
+  test("a filter, a join, a count or a write on a served statement returns the plain session's rows") {
+    tables
+    val sql = (k: Long) =>
+      s"SELECT o_orderkey, o_totalprice, o_orderdate FROM tc_orders WHERE o_custkey BETWEEN $k AND ${k + 4}"
+    rows(spark, sql(1)); rows(spark, sql(2))
+    def both(k: Long) = {
+      val df = spark.sql(sql(k))
+      assert(statementServed(df), sql(k))
+      (df, plain.sql(sql(k)))
+    }
+    def same(a: DataFrame, b: DataFrame) =
+      assert(a.collect().map(_.toString).sorted.toSeq === b.collect().map(_.toString).sorted.toSeq)
+    val (a, pa) = both(40)
+    same(a.filter(col("o_totalprice") > 100), pa.filter(col("o_totalprice") > 100))
+    val other = (s: SparkSession) => s.table("tc_orders4").select("o_orderkey", "o_bucket")
+    same(a.join(other(spark), "o_orderkey"), pa.join(other(plain), "o_orderkey"))
+    assert(a.count() === pa.count())
+    assert(a.toLocalIterator().asScala.map(_.toString).toSeq.sorted ===
+      pa.collect().map(_.toString).toSeq.sorted)
+    val (b, _) = both(40)
+    assert(a.join(b, "o_orderkey").count() === pa.count())
+    a.write.parquet(s"$dir/served_written")
+    same(spark.read.parquet(s"$dir/served_written"), pa)
+    // and the served statement itself still collects from its template
+    val (c, pc) = both(41)
+    val before = cache.statementHits.get
+    same(c, pc)
+    assert(cache.statementHits.get - before === 1)
+  }
+
+  test("EXPLAIN of a served statement shows its own operators and values") {
+    tables
+    val sql = (k: Long) =>
+      s"SELECT o_orderkey, o_totalprice FROM tc_orders WHERE o_custkey = $k AND o_totalprice > 50"
+    rows(spark, sql(1)); rows(spark, sql(2))
+    val a = spark.sql(sql(1234))
+    val b = spark.sql(sql(1987))
+    assert(statementServed(a) && statementServed(b))
+    b.collect()
+    val plan = a.queryExecution.executedPlan.toString
+    assert(plan.contains("ServedStatement") && plan.contains("Filter") &&
+      plan.contains("FileScan"), plan)
+    assert("[^#\\d]1234\\b".r.findFirstIn(plan).nonEmpty, plan)
+    assert("[^#\\d]1987\\b".r.findFirstIn(plan).isEmpty, plan)
+    assert(a.queryExecution.toString.contains("ServedStatement"))
+  }
+
+  test("a table rewritten between reads marks its keys volatile; a stable lookup still builds and serves") {
+    tables
+    import spark.implicits._
+    val path = s"$dir/cdc"
+    Incremental.applyChangesGuarded(spark,
+      (1L to 50L).map(k => (k, k * 10, "I", 1L)).toDF("k", "v", "op", "seq"), path, Seq("k"))
+    val builds = cache.builds.get
+    val volatiles = cache.volatiles.get
+    var lastReads = 0L
+    for (b <- 1 to 5) {
+      val changes = (1 to 5).map(i => (((b * 7 + i) % 60 + 1).toLong, (b * 100 + i).toLong,
+        if (i == 5) "D" else "U", b + 1L)).toDF("k", "v", "op", "seq")
+      Incremental.applyChangesGuarded(spark, changes, path, Seq("k"))
+      val f0 = cache.fingerprints.get
+      val live = Incremental.readCdcTable(spark, path)
+      val key = ((b * 7 + 1) % 60 + 1).toLong
+      val point = live.filter(col("k") === key).collect()
+      val agg = live.agg(count(lit(1)), coalesce(sum(col("v")), lit(0L))).collect()
+      lastReads = cache.fingerprints.get - f0
+      val truth = Incremental.readCdcTable(plain, path)
+      assert(point.map(_.toString).toSeq ===
+        truth.filter(col("k") === key).collect().map(_.toString).toSeq)
+      assert(agg.head.getLong(0) === truth.count())
+    }
+    assert(cache.builds.get === builds)
+    assert(cache.volatiles.get - volatiles === 2)
+    assert(lastReads === 0)
+    val stable = (k: Long) => spark.table("tc_orders").where(col("o_custkey") === k)
+      .select(col("o_orderkey"), (col("o_totalprice") * 3).as("p3"))
+    val hits = cache.hits.get
+    for (k <- 1L to 3L) assert(stable(k).collect().length === 10)
+    assert(cache.builds.get - builds === 1)
+    assert(cache.hits.get - hits === 2)
   }
 }

@@ -9,8 +9,8 @@ import graft.plans.TemplateCache
   * them (several queries order ties arbitrarily). The second pass meets
   * every query a second time, so each one the template cache admits is
   * served by its retained RDD: the two files must be identical. Prints
-  * the cache's builds and hits per pass and the queries whose rows
-  * differ; exits 1 if any do.
+  * the cache's builds and hits per pass, plan-level and statement-level
+  * apart, and the queries whose rows differ; exits 1 if any do.
   *
   * {{{ sbt "Test/runMain graft.VerifyTwoPass <sfDir> <outDir> [onlyQuery1,...]" }}} */
 object VerifyTwoPass {
@@ -22,7 +22,10 @@ object VerifyTwoPass {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     def pass(n: Int): Map[String, Seq[String]] = {
-      val (b0, h0) = (cache.builds.get, cache.hits.get)
+      def counts = Seq(cache.builds.get - cache.statementBuilds.get,
+        cache.hits.get - cache.statementHits.get, cache.statementBuilds.get,
+        cache.statementHits.get)
+      val before = counts
       val rows = queries.map { case (name, fn) =>
         val r = try fn(spark, sfDir).collect().map(_.toString).toSeq.sorted
           catch { case e: Throwable => Seq(s"failed: ${e.getMessage}") }
@@ -32,8 +35,11 @@ object VerifyTwoPass {
       Files.createDirectories(Paths.get(outDir))
       Files.writeString(Paths.get(s"$outDir/pass$n.txt"), rows.flatMap { case (name, r) =>
         r.map(row => s"$name\t$row\n") }.mkString)
-      println(s"[two-pass] pass $n: ${queries.size} queries, " +
-        s"${cache.builds.get - b0} templates built, ${cache.hits.get - h0} hits")
+      val Seq(planBuilds, planHits, statementBuilds, statementHits) =
+        counts.zip(before).map { case (a, b) => a - b }
+      println(s"[two-pass] pass $n: ${queries.size} queries, plan key: $planBuilds " +
+        s"templates built, $planHits hits; statement key: $statementBuilds built, " +
+        s"$statementHits hits")
       rows.toMap
     }
     val (first, second) = (pass(1), pass(2))
