@@ -49,10 +49,14 @@ import graft.sql.GraftExtensions
   *       optimization or planning). Validated per sighting: SQL conf,
   *       the named temporary views (identity, file listing) and called
   *       functions (identity); only file-source temporary views,
-  *       built-in or temporary functions, no cached data. A refused or
-  *       failed build plans the statement as before. A DataFrame built
-  *       on a served statement plans the statement in full under an
-  *       opaque leaf, so its filters are not pushed into the scans
+  *       built-in or temporary functions, no `WITH` clause, no cached
+  *       data. A refused or failed build plans the statement as before.
+  *       A DataFrame built on a served statement, or any action but
+  *       `collect()`, plans the template's analyzed plan with the
+  *       statement's values (the views validated at parse time) under
+  *       an opaque leaf, so its filters are not pushed into the scans;
+  *       data cached from the leaf serves the statement analyzed in
+  *       full, as the leaf compares as that plan
   *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
   *    local file system with permissions set through java.nio instead
   *    of a forked `chmod` per directory, part file and `.crc` (no

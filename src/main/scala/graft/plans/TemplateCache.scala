@@ -46,13 +46,16 @@ import org.apache.spark.sql.types._
   *    literals that are direct operands of a comparison, an `IN` list,
   *    a `BETWEEN` or arithmetic in a `WHERE` or `HAVING` condition
   *    masked, plus the current catalog and namespace. Only statements
-  *    over file-source temporary views (views of a DataFrame) and
-  *    built-in or temporary functions qualify, and none while the
-  *    session caches any data. A hit returns an already-analyzed
-  *    [[ServedStatement]] leaf, so analysis, optimization and planning
-  *    of the statement are skipped; its `executeCollect` runs the
-  *    retained RDD, and a DataFrame built on it, or any other action,
-  *    plans the statement in full beneath it.
+  *    without a `WITH` clause over file-source temporary views (views
+  *    of a DataFrame) and built-in or temporary functions qualify, and
+  *    none while the session caches any data. A hit returns an
+  *    already-analyzed [[ServedStatement]] leaf, so analysis,
+  *    optimization and planning of the statement are skipped; its
+  *    `executeCollect` runs the retained RDD, and a DataFrame built on
+  *    it, or any other action, plans the template's analyzed plan with
+  *    the statement's values beneath it. That plan holds the views the
+  *    statement's fingerprint validated, so the leaf reads what the
+  *    statement read when it was parsed, as an analyzed statement does.
   *
   * Both keys share the rest:
   *  - Build: the second time a key is seen with the same session SQL
@@ -128,7 +131,7 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
       val key = StatementKey(normalized(masked), catalogs.currentCatalog.name,
         catalogs.currentNamespace.toSeq)
       template(key, statementFingerprint(parsed))(buildStatement(parsed, params)) match {
-        case Some(t) => ServedStatement(t, params, t.output.map(_.newInstance()), parsed)
+        case Some(t) => ServedStatement(t, params, t.logical.output.map(_.newInstance()))
         case None => parsed
       }
     } catch { case NonFatal(_) => parsed }
@@ -198,11 +201,8 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
   private def statementFingerprint(parsed: LogicalPlan): Option[Fingerprint] = {
     val catalog = spark.sessionState.catalog
     val registry = spark.sessionState.functionRegistry
-    val resolver = spark.sessionState.conf.resolver
-    val ctes = parsed.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }.flatten
     val views = parsed.collect {
-      case r: UnresolvedRelation if !(r.multipartIdentifier.size == 1 &&
-          ctes.exists(resolver(_, r.multipartIdentifier.head))) =>
+      case r: UnresolvedRelation =>
         if (r.multipartIdentifier.size != 1 || r.isStreaming) None
         else catalog.getRawTempView(r.multipartIdentifier.head)
           .filter(_.plan.exists(_.collectLeaves().forall(fileSource)))
@@ -223,7 +223,7 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
   private def build(query: LogicalPlan, params: Seq[Literal]): Option[Template] = {
     val slots = params.map(l => new ParamSlot(l.value))
     val (copy, _) = mask(query, slots)
-    val t = execute(new PlannedQuery(spark, copy), slots, Nil, 0, statement = false)
+    val t = execute(new PlannedQuery(spark, copy), slots, copy, 0, statement = false)
     t.foreach(_ => builds.incrementAndGet())
     t
   }
@@ -240,15 +240,14 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
       admissible(qe.optimizedPlan, slotted = true) &&
       new QueryExecution(spark, parsed).analyzed.schema == analyzed.schema
     val t = if (!ok) None
-      else execute(qe, slots, analyzed.output, qe.optimizedPlan.stats.sizeInBytes,
-        statement = true)
+      else execute(qe, slots, analyzed, qe.optimizedPlan.stats.sizeInBytes, statement = true)
     t.foreach { _ => builds.incrementAndGet(); statementBuilds.incrementAndGet() }
     t
   }
 
   /** The template `qe` executes to, if its plan is one stage over
     * fixed scans. */
-  private def execute(qe: QueryExecution, slots: Seq[ParamSlot], output: Seq[Attribute],
+  private def execute(qe: QueryExecution, slots: Seq[ParamSlot], logical: LogicalPlan,
       sizeInBytes: BigInt, statement: Boolean): Option[Template] = outsideExecution {
     val plan = qe.executedPlan
     val initial = plan match {
@@ -267,7 +266,7 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
         case p => p
       }
       if (!oneStage(done) || !fixedScans(done) || !narrow(rdd)) None
-      else Some(new Template(slots, rdd, done, output, sizeInBytes, () => {
+      else Some(new Template(slots, rdd, done, logical, sizeInBytes, () => {
         hits.incrementAndGet()
         if (statement) statementHits.incrementAndGet()
       }))
@@ -401,11 +400,13 @@ object TemplateCache {
     (masked, found.toSeq)
   }
 
-  /** Parse-tree nodes a served statement may consist of. */
+  /** Parse-tree nodes a served statement may consist of. A `WITH`
+    * clause is not among them: its bodies are inner children, which
+    * neither the key, the mask nor the fingerprint walks. */
   private def statementShape(parsed: LogicalPlan): Boolean = !parsed.exists {
     case _: Project | _: Filter | _: Sort | _: Aggregate | _: UnresolvedHaving |
         _: SubqueryAlias | _: UnresolvedRelation | _: GlobalLimit | _: LocalLimit |
-        _: Distinct | _: Join | _: Union | _: UnresolvedWith | _: WithWindowDefinition =>
+        _: Distinct | _: Join | _: Union | _: WithWindowDefinition =>
       false
     case _ => true
   } && !parsed.exists(_.expressions.exists(SubqueryExpression.hasSubquery))
@@ -516,10 +517,10 @@ object TemplateCache {
 }
 
 /** A built template: the slots of its plan, the RDD that plan executed
-  * to, the plan itself (for EXPLAIN) and, for a statement, the output
-  * and size of its analyzed plan. */
+  * to, the plan itself (for EXPLAIN), the logical plan it was planned
+  * from (for a statement, its analyzed plan) and that plan's size. */
 final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow],
-    plan: SparkPlan, private[plans] val output: Seq[Attribute],
+    plan: SparkPlan, private[plans] val logical: LogicalPlan,
     private[plans] val sizeInBytes: BigInt, onRun: () => Unit) {
   private val busy = new AtomicBoolean
 
@@ -534,9 +535,14 @@ final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow
     } finally busy.set(false)
 
   /** The template's plan with `params` in place of its slots. */
-  private[plans] def bound(params: Seq[Literal]): SparkPlan = {
+  private[plans] def bound(params: Seq[Literal]): SparkPlan = bind(plan, params)
+
+  /** The template's logical plan with `params` in place of its slots. */
+  private[plans] def boundLogical(params: Seq[Literal]): LogicalPlan = bind(logical, params)
+
+  private def bind[P <: QueryPlan[P]](p: P, params: Seq[Literal]): P = {
     val at = slots.zip(params).toMap
-    plan.transformAllExpressions { case h: HoistedLiteral if at.contains(h.slot) => at(h.slot) }
+    p.transformAllExpressions { case h: HoistedLiteral if at.contains(h.slot) => at(h.slot) }
   }
 }
 
@@ -562,34 +568,50 @@ case class TemplateHitExec(@transient template: Template, params: Seq[Literal],
 }
 
 /** A `SparkSession.sql` statement served by a [[Template]], returned by
-  * the parser already analyzed: `output` has the statement's schema,
-  * `params` its masked values and `statement` its parse tree. A
-  * DataFrame built on it sees an opaque relation: filters on it are not
-  * pushed into its scans. */
+  * the parser already analyzed: `output` has the statement's schema and
+  * `params` its masked values. A DataFrame built on it sees an opaque
+  * relation: filters on it are not pushed into its scans. */
 case class ServedStatement(template: Template, params: Seq[Literal],
-    output: Seq[Attribute], statement: LogicalPlan) extends LeafNode with MultiInstanceRelation {
+    output: Seq[Attribute]) extends LeafNode with MultiInstanceRelation {
+  /** The statement's analyzed plan: the template's, with `params` bound. */
+  @transient private[plans] lazy val bound: LogicalPlan = template.boundLogical(params)
+
   // born analyzed, so the analyzer returns it as it stands
   override def analyzed: Boolean = true
   override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
   override def computeStats(): Statistics = Statistics(template.sizeInBytes)
+  // compared as the plan it stands for, so data cached from a served
+  // statement serves the same statement analyzed in full, and back
+  override protected def doCanonicalize(): LogicalPlan = bound.canonicalized
   override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
-  private[plans] def exec: SparkPlan = ServedStatementExec(template, params, output, statement)
+  private[plans] def exec: SparkPlan = ServedStatementExec(template, params, output, bound)
 }
 
 /** Plans a [[ServedStatement]]. `executeCollect` runs its template with
   * its `params`; every other action (and a collect that finds the
-  * template busy) runs the statement planned in full from its parse
-  * tree. EXPLAIN shows the template's plan with this statement's
+  * template busy) plans and runs `bound`, the statement's analyzed
+  * plan. EXPLAIN shows the template's plan with this statement's
   * values. */
 case class ServedStatementExec(@transient template: Template, params: Seq[Literal],
-    output: Seq[Attribute], @transient statement: LogicalPlan) extends LeafExecNode {
-  @transient private lazy val planned: SparkPlan =
-    new QueryExecution(session, statement).executedPlan
+    output: Seq[Attribute], @transient bound: LogicalPlan) extends LeafExecNode {
+  @transient private lazy val planned: SparkPlan = new BoundStatement(session, bound).executedPlan
   override protected def doExecute(): RDD[InternalRow] = planned.execute()
   override def executeCollect(): Array[InternalRow] =
     template.run(params).getOrElse(planned.executeCollect())
   override def innerChildren: Seq[QueryPlan[_]] = Seq(template.bound(params))
   override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
+}
+
+/** Plans the analyzed plan of a served statement as a fragment of the
+  * query that reads it, not as an answer, so the plan key never sees
+  * it. It reads no cached data: data cached from the statement itself
+  * is computed by this plan. */
+private final class BoundStatement(session: classic.SparkSession, plan: LogicalPlan)
+    extends QueryExecution(session, plan) {
+  override def analyzed: LogicalPlan = plan
+  override def withCachedData: LogicalPlan = plan
+  override lazy val sparkPlan: SparkPlan =
+    session.sessionState.planner.plan(optimizedPlan.clone()).next()
 }
 
 /** Plans a logical plan that is already optimized, as it stands. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -291,11 +292,18 @@ class TemplateCacheSpec extends AnyFunSuite {
     }
     assert(cache.builds.get === builds)
     // a statement's second parse builds its template before the action
-    // is known; a write runs the statement's own plan
+    // is known, so the repeated write statement (a shape no other test
+    // issues) builds one statement template; a write never builds a
+    // plan-key template and never runs a template
+    val write = "SELECT o_orderdate, o_orderkey FROM tc_orders WHERE o_custkey = 40"
+    val statementBuilds = cache.statementBuilds.get
     for (i <- 1 to 3) {
-      spark.sql(point(40)).write.parquet(s"$dir/written$i")
-      assert(spark.read.parquet(s"$dir/written$i").count() === rows(plain, point(40)).size)
+      spark.sql(write).write.parquet(s"$dir/written$i")
+      assert(spark.read.parquet(s"$dir/written$i").collect().map(_.toString).toSeq.sorted ===
+        rows(plain, write).sorted)
     }
+    assert(cache.builds.get - cache.statementBuilds.get === builds - statementBuilds)
+    assert(cache.statementBuilds.get - statementBuilds === 1)
     assert(cache.hits.get === hits)
   }
 
@@ -411,6 +419,79 @@ class TemplateCacheSpec extends AnyFunSuite {
     val before = cache.statementHits.get
     same(c, pc)
     assert(cache.statementHits.get - before === 1)
+  }
+
+  test("a served statement reads the views of its parse, as an analyzed statement does") {
+    tables
+    orders(1, 5001).coalesce(1).write.parquet(s"$dir/late_a")
+    orders(5001, 10001).coalesce(1).write.parquet(s"$dir/late_b")
+    def sorted(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    // a view replaced between spark.sql and the action
+    val actions = Seq[DataFrame => Any](_.count(), sorted(_),
+      df => sorted(df.filter(col("o_totalprice") > 100)),
+      df => sorted(df.orderBy("o_orderkey").limit(3)))
+    for ((action, i) <- actions.zipWithIndex) {
+      val sql = (k: Long) => "SELECT o_custkey, o_orderkey, o_totalprice " +
+        s"FROM tc_late$i WHERE o_custkey BETWEEN $k AND ${k + 4}"
+      view(s"tc_late$i", s"$dir/late_a")
+      rows(spark, sql(1)); rows(spark, sql(2))
+      val df = spark.sql(sql(40))
+      val pdf = plain.sql(sql(40))
+      assert(statementServed(df), sql(40))
+      view(s"tc_late$i", s"$dir/late_b")
+      assert(action(df) === action(pdf), sql(40))
+      assert(sorted(spark.sql(sql(40))) === sorted(plain.sql(sql(40))), sql(40))
+    }
+    // a view redefined in terms of itself
+    view("tc_self", s"$dir/late_a")
+    val self = (k: Long) =>
+      s"SELECT o_custkey, o_orderkey, o_totalprice FROM tc_self WHERE o_custkey < $k"
+    rows(spark, self(900)); rows(spark, self(901))
+    val redefined = spark.sql(self(500))
+    assert(statementServed(redefined))
+    redefined.createOrReplaceTempView("tc_self")
+    plain.sql(self(500)).createOrReplaceTempView("tc_self")
+    for (q <- Seq("SELECT count(*) AS n, sum(o_orderkey) AS s FROM tc_self", self(300), self(301),
+        self(302)))
+      assert(rows(spark, q).sorted === rows(plain, q).sorted, q)
+  }
+
+  test("a WITH clause is never served: a view replaced inside a CTE body is read anew") {
+    tables
+    orders(1, 5001).coalesce(1).write.parquet(s"$dir/cte_a")
+    orders(5001, 10001).coalesce(1).write.parquet(s"$dir/cte_b")
+    val sql = (k: Long) =>
+      s"WITH c AS (SELECT * FROM tc_cte) SELECT o_orderkey, o_totalprice FROM c WHERE o_custkey = $k"
+    val hits = cache.statementHits.get
+    val builds = cache.statementBuilds.get
+    for (path <- Seq("cte_a", "cte_b"); k <- 11L to 13L) {
+      view("tc_cte", s"$dir/$path")
+      val df = spark.sql(sql(k))
+      assert(!statementServed(df), sql(k))
+      assert(df.collect().map(_.toString).toSeq.sorted === rows(plain, sql(k)).sorted, sql(k))
+    }
+    assert(cache.statementHits.get === hits)
+    assert(cache.statementBuilds.get === builds)
+  }
+
+  test("cache() of a served statement serves the same statement issued again") {
+    tables
+    val sql = (k: Long) => s"SELECT o_orderkey, o_custkey, o_totalprice FROM tc_orders4 WHERE o_custkey = $k"
+    rows(spark, sql(1)); rows(spark, sql(2))
+    val served = spark.sql(sql(3))
+    assert(statementServed(served))
+    served.cache()
+    try {
+      val again = spark.sql(sql(3))
+      assert(!statementServed(again))
+      assert(again.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]),
+        again.queryExecution.withCachedData)
+      assert(again.collect().map(_.toString).toSeq.sorted === rows(plain, sql(3)).sorted)
+      assert(served.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+      assert(served.count() === rows(plain, sql(3)).size)
+      // another key is not the cached data
+      assert(!spark.sql(sql(4)).queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+    } finally served.unpersist(blocking = true)
   }
 
   test("EXPLAIN of a served statement shows its own operators and values") {
