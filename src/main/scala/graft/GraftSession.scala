@@ -24,39 +24,33 @@ import graft.sql.GraftExtensions
   *       compared in a `Filter` are read from the generated class's
   *       references, so a template's new key reuses its compiled
   *       code; scans and their pushed filters keep the literal
-  *     - the template cache ([[graft.plans.TemplateCache]]), a planner
-  *       strategy with one cache per session: keyed by the canonical
-  *       optimized plan with those filter literals masked; from the
-  *       second sighting of a key, a copy with the literals as slots is
-  *       executed to an RDD once, and each later `collect()` binds its
-  *       values and runs that RDD as one job. Admits deterministic plans
-  *       over file sources with no subquery, command or user code whose
-  *       copy is one stage and whose scans filter no partition column on
-  *       a slot; a template serves one query at a time and only while
-  *       the session's SQL conf and every scan's file listing are as
-  *       they were at build time. Slots are not pushed into Parquet, so
-  *       a hit reads every row group of its (one-partition) inputs. A
-  *       key whose fingerprint changed at 3 sightings in a row without a
-  *       build is volatile: planned without the cache, unfingerprinted
-  *     - the statement key of the same cache, through an injected
-  *       parser: a `spark.sql` statement without parameters is keyed by
-  *       its parse tree with the numeric/date/timestamp operands of
-  *       comparisons, `IN`, `BETWEEN` and arithmetic in `WHERE`/`HAVING`
-  *       masked, plus the current catalog and database; from the second
-  *       sighting the masked tree is analyzed and optimized once with
-  *       typed slots, and each hit returns an already-analyzed leaf
-  *       whose `collect()` runs the retained RDD (no analysis,
-  *       optimization or planning). Validated per sighting: SQL conf,
-  *       the named temporary views (identity, file listing) and called
-  *       functions (identity); only file-source temporary views,
-  *       built-in or temporary functions, no `WITH` clause, no cached
-  *       data. A refused or failed build plans the statement as before.
-  *       A DataFrame built on a served statement, or any action but
-  *       `collect()`, plans the template's analyzed plan with the
-  *       statement's values (the views validated at parse time) under
-  *       an opaque leaf, so its filters are not pushed into the scans;
-  *       data cached from the leaf serves the statement analyzed in
-  *       full, as the leaf compares as that plan
+  *     - the template cache ([[graft.plans.TemplateCache]]), held by an
+  *       injected parser, one cache per session: a `spark.sql`
+  *       statement without parameters is keyed by its parse tree with
+  *       the numeric/date/timestamp operands of comparisons, `IN`,
+  *       `BETWEEN` and arithmetic in `WHERE`/`HAVING` masked, plus the
+  *       current catalog and database; from the second sighting the
+  *       masked tree is analyzed, optimized and executed to an RDD once
+  *       with typed slots, and each hit returns an already-analyzed leaf
+  *       whose `collect()` binds its values and runs the retained RDD as
+  *       one job (no analysis, optimization, planning or codegen).
+  *       Validated per sighting: SQL conf, the named temporary views
+  *       (identity, file listing) and called functions (identity); only
+  *       file-source temporary views, built-in or temporary functions,
+  *       no `WITH` clause, no cached data, and a deterministic one-stage
+  *       plan with no subquery, command or user code and no partition
+  *       filter on a slot. A template serves one query at a time; slots
+  *       are not pushed into Parquet, so a hit reads every row group of
+  *       its (one-partition) inputs. A key whose fingerprint changed at
+  *       3 sightings in a row without a build is volatile: planned
+  *       without the cache, unfingerprinted. A refused or failed build
+  *       plans the statement as before, and DataFrame queries never
+  *       meet the cache. A DataFrame built on a served statement, or
+  *       any action but `collect()`, plans the template's analyzed plan
+  *       with the statement's values (the views validated at parse
+  *       time) under an opaque leaf, so its filters are not pushed into
+  *       the scans; data cached from the leaf serves the statement
+  *       analyzed in full, as the leaf compares as that plan
   *  - `file:` served by [[graft.sources.NioLocalFileSystem]]: Hadoop's
   *    local file system with permissions set through java.nio instead
   *    of a forked `chmod` per directory, part file and `.crc` (no

@@ -289,11 +289,11 @@ final class Runner(
 
   private def runChecksOf(m: Model, result: DataFrame): Unit =
     for ((checkName, check) <- m.checks) {
-      val violations = check(result)
-      if (!violations.isEmpty)
+      // one evaluation: the count both gates and goes into the message
+      val n = check(result).count()
+      if (n > 0)
         throw new DataCheckException(
-          s"model ${m.name} failed check '$checkName': " +
-            s"${violations.count()} violating rows", m.name)
+          s"model ${m.name} failed check '$checkName': $n violating rows", m.name)
     }
 
   /** Run all models in dependency order; returns name -> result

@@ -75,7 +75,7 @@ object ElideSinglePartitionShuffles extends Rule[SparkPlan] {
     case _: ProjectExec | _: FilterExec | _: SortExec | _: BaseAggregateExec |
         _: WindowExec | _: WindowGroupLimitExec | _: LocalLimitExec |
         _: GlobalLimitExec | _: SampleExec | _: WriteFilesExec |
-        _: DataWritingCommandExec | _: TemplateHitExec =>
+        _: DataWritingCommandExec =>
       single(p.children.head)
     case _: CollectLimitExec | _: TakeOrderedAndProjectExec =>
       single(p.children.head).map(_ => true)
@@ -128,10 +128,9 @@ object ElideSinglePartitionShuffles extends Rule[SparkPlan] {
   * before `CollapseCodegenStages`, with or without AQE. */
 object HoistFilterLiterals extends Rule[SparkPlan] {
 
-  /** A literal this rule (and [[TemplateCache]]'s key) lifts out of a
-    * comparison: non-null and of a primitive numeric, date or
-    * timestamp type. */
-  private[plans] def hoistable(e: Expression): Boolean = e match {
+  /** A literal this rule lifts out of a comparison: non-null and of a
+    * primitive numeric, date or timestamp type. */
+  private def hoistable(e: Expression): Boolean = e match {
     case Literal(v, t) if v != null => t match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
           DateType | TimestampType | TimestampNTZType => true
@@ -156,11 +155,12 @@ object HoistFilterLiterals extends Rule[SparkPlan] {
 /** A non-null numeric, date or timestamp operand that generated code reads from the
   * generated class's references array instead of inlining it. Two
   * kinds share it: a filter literal hoisted by [[HoistFilterLiterals]],
-  * whose slot holds that literal for good, and a parameter of a
-  * [[TemplateCache]] template, whose slot is bound to the current
-  * query's value before each run. The slot, not a value, goes into the
-  * references, and the task closure that carries them is serialized
-  * per job, so each run reads the value bound when its job started.
+  * whose slot holds that literal for good, and a masked literal of a
+  * SQL statement served by a [[TemplateCache]] template, whose slot is
+  * bound to the current statement's value before each run. The slot,
+  * not a value, goes into the references, and the task closure that
+  * carries them is serialized per job, so each run reads the value
+  * bound when its job started.
   *
   * Prints as the literal its slot holds. Not foldable, so no rule folds
   * it back into the source, and a scan never turns it into a pushed or

@@ -16,7 +16,6 @@ import org.apache.spark.sql.catalyst.parser.{NamedParameterContext, ParameterCon
   ParserInterface, PositionalParameterContext}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
@@ -26,48 +25,38 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types._
 
-/** Session-level cache of interactive query templates. A lookup that
-  * differs from an earlier one only in the numbers or dates it compares
-  * against runs the earlier one's retained RDD with its own values
-  * bound, so it skips RDD construction, closure cleaning, the scan's
-  * Hadoop-configuration broadcast and code generation. Two keys lead to
-  * a template:
+/** Session-level cache of interactive SQL templates. A `SparkSession.sql`
+  * statement that differs from an earlier one only in the numbers or
+  * dates it compares against runs the earlier one's retained RDD with
+  * its own values bound, so it skips analysis, optimization, physical
+  * planning, RDD construction, closure cleaning, the scan's Hadoop
+  * configuration broadcast and code generation.
   *
-  *  - Plan key (DataFrame queries, and statements the statement key
-  *    refuses): the canonical form of the optimized plan with every
-  *    literal [[HoistFilterLiterals]] would hoist (non-null numeric,
-  *    date and timestamp operands of a comparison in a `Filter`)
-  *    masked. A hit plans as it always does, under a [[TemplateHitExec]]
-  *    root whose `executeCollect` binds the query's values into the
-  *    slots and runs the retained RDD as one job; every other action
-  *    runs the plan beneath it.
-  *  - Statement key (`SparkSession.sql`, through [[TemplateCache.Parser]]):
-  *    the parse tree with the non-null numeric, date and timestamp
-  *    literals that are direct operands of a comparison, an `IN` list,
-  *    a `BETWEEN` or arithmetic in a `WHERE` or `HAVING` condition
-  *    masked, plus the current catalog and namespace. Only statements
-  *    without a `WITH` clause over file-source temporary views (views
-  *    of a DataFrame) and built-in or temporary functions qualify, and
-  *    none while the session caches any data. A hit returns an
-  *    already-analyzed [[ServedStatement]] leaf, so analysis,
-  *    optimization and planning of the statement are skipped; its
-  *    `executeCollect` runs the retained RDD, and a DataFrame built on
-  *    it, or any other action, plans the template's analyzed plan with
-  *    the statement's values beneath it. That plan holds the views the
-  *    statement's fingerprint validated, so the leaf reads what the
-  *    statement read when it was parsed, as an analyzed statement does.
-  *
-  * Both keys share the rest:
+  *  - Key: the statement's parse tree (through [[TemplateCache.Parser]])
+  *    with the non-null numeric, date and timestamp literals that are
+  *    direct operands of a comparison, an `IN` list, a `BETWEEN` or
+  *    arithmetic in a `WHERE` or `HAVING` condition masked, plus the
+  *    current catalog and namespace. Only statements without a `WITH`
+  *    clause over file-source temporary views (views of a DataFrame)
+  *    and built-in or temporary functions qualify, and none while the
+  *    session caches any data. A hit returns an already-analyzed
+  *    [[ServedStatement]] leaf; its `executeCollect` runs the retained
+  *    RDD, and a DataFrame built on it, or any other action, plans the
+  *    template's analyzed plan with the statement's values beneath it.
+  *    That plan holds the views the statement's fingerprint validated,
+  *    so the leaf reads what the statement read when it was parsed, as
+  *    an analyzed statement does. DataFrame queries never meet the
+  *    cache: they plan as without it.
   *  - Build: the second time a key is seen with the same session SQL
-  *    conf, the same file listing of every scan (and, for a statement,
-  *    the same temporary views and function definitions), a copy whose
-  *    masked literals are typed, non-foldable [[HoistedLiteral]] slots
-  *    is planned and executed to an RDD, once. A statement's copy is
-  *    analyzed and optimized with its slots, so it is correct for any
-  *    value of their types; it is kept only if it reads no clock or
-  *    session variable, coerces no integral slot to a decimal (whose
-  *    precision Spark derives from a literal's value) and yields the
-  *    schema the statement itself analyzes to.
+  *    conf, the same temporary views and function definitions and the
+  *    same file listing of every view's scans, a copy whose masked
+  *    literals are typed, non-foldable [[HoistedLiteral]] slots is
+  *    analyzed, optimized, planned and executed to an RDD, once. The
+  *    copy is correct for any value of its slots' types; it is kept
+  *    only if it reads no clock or session variable, coerces no
+  *    integral slot to a decimal (whose precision Spark derives from a
+  *    literal's value) and yields the schema the statement itself
+  *    analyzes to.
   *  - Eligible: deterministic plans over file-source leaves only, with
   *    no subquery, command, observed metrics or user code (UDFs and
   *    typed object operators, whose closures a retained RDD would keep
@@ -80,57 +69,41 @@ import org.apache.spark.sql.types._
   *  - Safety: a template serves one query at a time (a second one runs
   *    its own plan), and only while what its build saw holds. A key
   *    whose fingerprint changed at `VolatileAfter` sightings in a row
-  *    without a build (a table rewritten between reads) is volatile: it
-  *    plans as without the cache and is not fingerprinted again until
-  *    it leaves the cache. At most `Capacity` keys per session are
-  *    kept, least recently used first out.
+  *    without a build (a view re-registered over a rewritten table
+  *    between reads) is volatile: it plans as without the cache and is
+  *    not fingerprinted again until it leaves the cache. At most
+  *    `Capacity` keys per session are kept, least recently used first
+  *    out.
   *
   * A slot is never pushed into the Parquet reader, so a hit reads every
   * row group of its files; eligible scans read one partition, which
   * bounds that loss. */
-final class TemplateCache private (session: SparkSession) extends ColumnarRule {
+final class TemplateCache private (session: SparkSession) {
   import TemplateCache._
 
   private val spark = session.asInstanceOf[classic.SparkSession]
-  private val states = new java.util.LinkedHashMap[AnyRef, State](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, State]): Boolean =
+  private val states = new java.util.LinkedHashMap[Key, State](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, State]): Boolean =
       size() > Capacity
   }
 
-  /** Runs served by a retained RDD and templates built, under either
-    * key; the statement key's share of each; fingerprints taken; keys
-    * marked volatile. */
+  /** Runs served by a retained RDD; templates built; fingerprints
+    * taken; keys marked volatile. */
   val hits = new AtomicLong
   val builds = new AtomicLong
-  val statementHits = new AtomicLong
-  val statementBuilds = new AtomicLong
   val fingerprints = new AtomicLong
   val volatiles = new AtomicLong
-
-  /** `root` planned from a template, or Nil to plan it as without the
-    * cache. */
-  private def plan(root: ReturnAnswer): Seq[SparkPlan] =
-    if (!admissible(root.child)) Nil
-    else {
-      val query = root.child
-      val (masked, params) = mask(query, keySlot)
-      template(masked.canonicalized, Some(fingerprint(query)))(build(query, params)) match {
-        case Some(t) =>
-          TemplateHitExec(t, params, spark.sessionState.planner.SpecialLimits(root).head) :: Nil
-        case None => Nil
-      }
-    }
 
   /** `parsed`, the parse tree of a `SparkSession.sql` statement, or a
     * leaf served by its template. */
   private def statement(parsed: LogicalPlan): LogicalPlan =
     if (!statementShape(parsed) || !spark.sharedState.cacheManager.isEmpty) parsed
     else try {
-      val (masked, params) = maskStatement(parsed, keySlot)
+      val (masked, params) = mask(parsed, keySlot)
       val catalogs = spark.sessionState.catalogManager
-      val key = StatementKey(normalized(masked), catalogs.currentCatalog.name,
+      val key = Key(normalized(masked), catalogs.currentCatalog.name,
         catalogs.currentNamespace.toSeq)
-      template(key, statementFingerprint(parsed))(buildStatement(parsed, params)) match {
+      template(key, fingerprint(parsed))(build(parsed, params)) match {
         case Some(t) => ServedStatement(t, params, t.logical.output.map(_.newInstance()))
         case None => parsed
       }
@@ -138,8 +111,8 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
 
   /** The template `key` leads to, built by `build` at the second
     * sighting with an unchanged fingerprint; None also when `fp` is
-    * None (the query does not qualify). */
-  private def template(key: AnyRef, fp: => Option[Fingerprint])(
+    * None (the statement does not qualify). */
+  private def template(key: Key, fp: => Option[Fingerprint])(
       build: => Option[Template]): Option[Template] = {
     if (states.synchronized(states.get(key)) == Volatile) return None
     fp.flatMap { fp =>
@@ -177,20 +150,16 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
     }
   }
 
-  private def admissible(query: LogicalPlan, slotted: Boolean = false): Boolean = {
+  private def admissible(query: LogicalPlan): Boolean = {
     val leaves = query.collectLeaves()
     leaves.nonEmpty && leaves.forall(fileSource) && !query.isStreaming &&
       query.deterministic && !query.exists {
         case _: Command | _: CollectMetrics | _: Tail | _: ObjectConsumer |
             _: ObjectProducer => true
         case p => p.expressions.exists(e => SubqueryExpression.hasSubquery(e) ||
-          e.exists(x => (!slotted && x.isInstanceOf[HoistedLiteral]) ||
-            x.isInstanceOf[UserDefinedExpression]))
+          e.exists(_.isInstanceOf[UserDefinedExpression]))
       }
   }
-
-  private def fingerprint(query: LogicalPlan): Fingerprint =
-    Fingerprint(spark.sessionState.conf.getAllConfs, query.collectLeaves().map(listing), Nil)
 
   /** What a statement's template depends on beyond its key: the SQL
     * conf, each temporary view it names (by identity) and that view's
@@ -198,7 +167,7 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
     * builder). None when it names anything else: a catalog table, a
     * view defined by SQL text or over a non-file source, a qualified
     * or unknown function. */
-  private def statementFingerprint(parsed: LogicalPlan): Option[Fingerprint] = {
+  private def fingerprint(parsed: LogicalPlan): Option[Fingerprint] = {
     val catalog = spark.sessionState.catalog
     val registry = spark.sessionState.functionRegistry
     val views = parsed.collect {
@@ -218,37 +187,25 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
       (views.flatten ++ functions.flatten).map(new Ref(_))))
   }
 
-  /** Plans a copy of `query` with its masked literals as slots, bound
-    * to `params`, and executes it to an RDD if it is one stage. */
-  private def build(query: LogicalPlan, params: Seq[Literal]): Option[Template] = {
-    val slots = params.map(l => new ParamSlot(l.value))
-    val (copy, _) = mask(query, slots)
-    val t = execute(new PlannedQuery(spark, copy), slots, copy, 0, statement = false)
-    t.foreach(_ => builds.incrementAndGet())
-    t
-  }
-
   /** Analyzes, optimizes and plans a copy of the statement `parsed`
     * with its masked literals as slots, bound to `params`, and executes
     * it to an RDD if it qualifies. */
-  private def buildStatement(parsed: LogicalPlan, params: Seq[Literal]): Option[Template] = {
+  private def build(parsed: LogicalPlan, params: Seq[Literal]): Option[Template] = {
     val slots = params.map(l => new ParamSlot(l.value))
-    val (copy, _) = maskStatement(parsed, slots)
+    val (copy, _) = mask(parsed, slots)
     val qe = new QueryExecution(spark, copy)
     val analyzed = qe.analyzed
     val ok = timeless(analyzed) && !decimalSlot(analyzed) &&
-      admissible(qe.optimizedPlan, slotted = true) &&
+      admissible(qe.optimizedPlan) &&
       new QueryExecution(spark, parsed).analyzed.schema == analyzed.schema
-    val t = if (!ok) None
-      else execute(qe, slots, analyzed, qe.optimizedPlan.stats.sizeInBytes, statement = true)
-    t.foreach { _ => builds.incrementAndGet(); statementBuilds.incrementAndGet() }
+    val t = if (!ok) None else execute(qe, slots)
+    t.foreach(_ => builds.incrementAndGet())
     t
   }
 
   /** The template `qe` executes to, if its plan is one stage over
     * fixed scans. */
-  private def execute(qe: QueryExecution, slots: Seq[ParamSlot], logical: LogicalPlan,
-      sizeInBytes: BigInt, statement: Boolean): Option[Template] = outsideExecution {
+  private def execute(qe: QueryExecution, slots: Seq[ParamSlot]) = outsideExecution {
     val plan = qe.executedPlan
     val initial = plan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -266,15 +223,13 @@ final class TemplateCache private (session: SparkSession) extends ColumnarRule {
         case p => p
       }
       if (!oneStage(done) || !fixedScans(done) || !narrow(rdd)) None
-      else Some(new Template(slots, rdd, done, logical, sizeInBytes, () => {
-        hits.incrementAndGet()
-        if (statement) statementHits.incrementAndGet()
-      }))
+      else Some(new Template(slots, rdd, done, qe.analyzed, qe.optimizedPlan.stats.sizeInBytes,
+        () => hits.incrementAndGet()))
     }
   }
 
-  /** Runs `body` outside the current query's SQL execution, so building
-    * a template posts no plan update to that query's listeners. */
+  /** Runs `body` outside any current SQL execution, so building a
+    * template posts no plan update to that execution's listeners. */
   private def outsideExecution[T](body: => T): T = {
     val sc = spark.sparkContext
     val id = sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
@@ -306,7 +261,7 @@ object TemplateCache {
   private final case class Fingerprint(conf: Map[String, String],
       files: Seq[Seq[(Path, Long, Long)]], refs: Seq[Ref])
 
-  private final case class StatementKey(tree: LogicalPlan, catalog: String,
+  private final case class Key(tree: LogicalPlan, catalog: String,
       namespace: Seq[String])
 
   private sealed trait State
@@ -316,36 +271,35 @@ object TemplateCache {
   private final case class Built(fp: Fingerprint, template: Template) extends State
   private case object Volatile extends State
 
-  /** A new, empty cache for `session`. [[graft.sql.GraftExtensions]]
-    * injects it as a columnar rule that changes nothing: Spark builds a
-    * session's columnar rules once per session state but its planner
-    * strategies on every planning, so held there the cache lives and
-    * dies with its session, and a cloned session starts with its own. */
-  def apply(session: SparkSession): TemplateCache = new TemplateCache(session)
-
   /** The cache of `session`, if it was built with
-    * [[graft.sql.GraftExtensions]]. */
+    * [[graft.sql.GraftExtensions]]: its [[Parser]] holds it. Spark
+    * builds a session's parser once per session state, so the cache
+    * lives and dies with its session, and a cloned session starts with
+    * its own. */
   def of(session: SparkSession): Option[TemplateCache] =
-    session.asInstanceOf[classic.SparkSession].sessionState.columnarRules
-      .collectFirst { case t: TemplateCache => t }
+    session.asInstanceOf[classic.SparkSession].sessionState.sqlParser match {
+      case p: Parser => Some(p.cache)
+      case _ => None
+    }
 
   /** The planner strategy [[graft.sql.GraftExtensions]] injects: plans
-    * a served statement as its [[ServedStatementExec]], and a query's
-    * root through the cache of `session`. */
-  final class Serve(session: SparkSession) extends SparkStrategy {
+    * a served statement as its [[ServedStatementExec]]. */
+  object Serve extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case ReturnAnswer(s: ServedStatement) => s.exec :: Nil
       case s: ServedStatement => s.exec :: Nil
-      case root: ReturnAnswer => of(session).fold(Seq.empty[SparkPlan])(_.plan(root))
       case _ => Nil
     }
   }
 
-  /** The session parser [[graft.sql.GraftExtensions]] injects: a
-    * `SparkSession.sql` statement without parameters goes through the
-    * cache's statement key; everything else (view text, `parseQuery`,
-    * expressions, identifiers) goes to `delegate` unchanged. */
+  /** The session parser [[graft.sql.GraftExtensions]] injects, holding
+    * the session's cache: a `SparkSession.sql` statement without
+    * parameters goes through the cache; everything else (view text,
+    * `parseQuery`, expressions, identifiers) goes to `delegate`
+    * unchanged. */
   final class Parser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
+    val cache = new TemplateCache(session)
+
     override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan = {
       val parsed = delegate.parsePlanWithParameters(sqlText, ctx)
       val bare = ctx match {
@@ -353,7 +307,7 @@ object TemplateCache {
         case n: NamedParameterContext => n.params.isEmpty
         case _ => false
       }
-      if (!bare) parsed else of(session).fold(parsed)(_.statement(parsed))
+      if (!bare) parsed else cache.statement(parsed)
     }
     override def parsePlan(sqlText: String): LogicalPlan = delegate.parsePlan(sqlText)
     override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
@@ -375,31 +329,6 @@ object TemplateCache {
   private val keySlots = new ConcurrentHashMap[Int, ParamSlot]()
   private def keySlot(i: Int): ParamSlot = keySlots.computeIfAbsent(i, _ => new ParamSlot(null))
 
-  private def slotFor(found: ArrayBuffer[Literal], slot: Int => ParamSlot,
-      l: Literal): HoistedLiteral = {
-    found += l
-    HoistedLiteral(slot(found.size - 1), l.dataType)
-  }
-
-  /** `plan` with each literal [[HoistFilterLiterals]] would hoist from a
-    * `Filter` replaced by a [[HoistedLiteral]] on `slot(i)`, numbered in
-    * pre-order, and the literals it replaced. */
-  private def mask(plan: LogicalPlan, slot: Int => ParamSlot): (LogicalPlan, Seq[Literal]) = {
-    val found = ArrayBuffer.empty[Literal]
-    val masked = plan.transformDown {
-      case f: Filter =>
-        val c = f.condition.transformDown {
-          case b: BinaryComparison if b.children.exists(HoistFilterLiterals.hoistable) =>
-            b.withNewChildren(b.children.map {
-              case l: Literal if HoistFilterLiterals.hoistable(l) => slotFor(found, slot, l)
-              case e => e
-            })
-        }
-        if (c fastEquals f.condition) f else f.copy(condition = c)
-    }
-    (masked, found.toSeq)
-  }
-
   /** Parse-tree nodes a served statement may consist of. A `WITH`
     * clause is not among them: its bodies are inner children, which
     * neither the key, the mask nor the fingerprint walks. */
@@ -411,8 +340,8 @@ object TemplateCache {
     case _ => true
   } && !parsed.exists(_.expressions.exists(SubqueryExpression.hasSubquery))
 
-  /** A statement literal the statement key masks: non-null and numeric,
-    * date or timestamp. */
+  /** A statement literal the key masks: non-null and numeric, date or
+    * timestamp. */
   private def maskable(e: Expression): Boolean = e match {
     case Literal(v, t) if v != null => t match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
@@ -426,8 +355,7 @@ object TemplateCache {
     * operand of a comparison, an `IN` list, a `BETWEEN` or arithmetic in
     * a `WHERE` or `HAVING` condition replaced by a [[HoistedLiteral]] on
     * `slot(i)`, numbered in pre-order, and the literals it replaced. */
-  private def maskStatement(plan: LogicalPlan,
-      slot: Int => ParamSlot): (LogicalPlan, Seq[Literal]) = {
+  private def mask(plan: LogicalPlan, slot: Int => ParamSlot): (LogicalPlan, Seq[Literal]) = {
     val found = ArrayBuffer.empty[Literal]
     def condition(c: Expression): Expression = c.transformDown {
       case e if e.children.exists(maskable) && (e match {
@@ -436,7 +364,9 @@ object TemplateCache {
           case _ => false
         }) =>
         e.withNewChildren(e.children.map {
-          case l: Literal if maskable(l) => slotFor(found, slot, l)
+          case l: Literal if maskable(l) =>
+            found += l
+            HoistedLiteral(slot(found.size - 1), l.dataType)
           case x => x
         })
     }
@@ -517,8 +447,8 @@ object TemplateCache {
 }
 
 /** A built template: the slots of its plan, the RDD that plan executed
-  * to, the plan itself (for EXPLAIN), the logical plan it was planned
-  * from (for a statement, its analyzed plan) and that plan's size. */
+  * to, the plan itself (for EXPLAIN), the statement's analyzed plan it
+  * was planned from and that plan's optimized size. */
 final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow],
     plan: SparkPlan, private[plans] val logical: LogicalPlan,
     private[plans] val sizeInBytes: BigInt, onRun: () => Unit) {
@@ -544,27 +474,6 @@ final class Template private[plans] (slots: Seq[ParamSlot], rdd: RDD[InternalRow
     val at = slots.zip(params).toMap
     p.transformAllExpressions { case h: HoistedLiteral if at.contains(h.slot) => at(h.slot) }
   }
-}
-
-/** Root of a query served by a [[Template]]: `executeCollect` runs the
-  * template with this query's `params`; the child is the query's own
-  * plan, which EXPLAIN shows and every other action (and a collect
-  * that finds the template busy) runs. Spark also plans subqueries
-  * (dynamic-pruning build sides among them) as answers, so the node
-  * can sit inside another plan: it canonicalizes as its child, keeping
-  * exchange reuse as it was, and its template is not serialized with
-  * the plan. */
-case class TemplateHitExec(@transient template: Template, params: Seq[Literal],
-    child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
-  override def executeCollect(): Array[InternalRow] =
-    template.run(params).getOrElse(child.executeCollect())
-  override def stringArgs: Iterator[Any] = Iterator(params.mkString("[", ", ", "]"))
-  override protected def doCanonicalize(): SparkPlan = child.canonicalized
-  override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
 }
 
 /** A `SparkSession.sql` statement served by a [[Template]], returned by
@@ -603,20 +512,13 @@ case class ServedStatementExec(@transient template: Template, params: Seq[Litera
 }
 
 /** Plans the analyzed plan of a served statement as a fragment of the
-  * query that reads it, not as an answer, so the plan key never sees
-  * it. It reads no cached data: data cached from the statement itself
-  * is computed by this plan. */
+  * query that reads it, whose plan its `execute` feeds. It reads no
+  * cached data: data cached from the statement itself is computed by
+  * this plan. */
 private final class BoundStatement(session: classic.SparkSession, plan: LogicalPlan)
     extends QueryExecution(session, plan) {
   override def analyzed: LogicalPlan = plan
   override def withCachedData: LogicalPlan = plan
   override lazy val sparkPlan: SparkPlan =
     session.sessionState.planner.plan(optimizedPlan.clone()).next()
-}
-
-/** Plans a logical plan that is already optimized, as it stands. */
-private final class PlannedQuery(session: classic.SparkSession, plan: LogicalPlan)
-    extends QueryExecution(session, plan) {
-  override def analyzed: LogicalPlan = plan
-  override def optimizedPlan: LogicalPlan = plan
 }

@@ -1672,10 +1672,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // interactive queries: one job, no per-key compile
     e.injectQueryStagePrepRule(_ => graft.plans.ElideSinglePartitionShuffles)
     e.injectColumnar(_ => graft.plans.HoistFilterLiteralsColumnarRule)
-    // repeated lookup templates: one retained RDD, the new key bound;
-    // a repeated SQL statement is served from its parse tree
-    e.injectColumnar(graft.plans.TemplateCache(_))
-    e.injectPlannerStrategy(new graft.plans.TemplateCache.Serve(_))
+    // repeated SQL statements: served from their parse tree by one
+    // retained RDD, the new values bound; the parser holds the cache
+    e.injectPlannerStrategy(_ => graft.plans.TemplateCache.Serve)
     e.injectParser(new graft.plans.TemplateCache.Parser(_, _))
   }
 }

@@ -75,19 +75,8 @@ class InteractivePlansSpec extends AnyFunSuite {
   private def exchanges(df: DataFrame): Int =
     initialNodes(df).count(_.isInstanceOf[ShuffleExchangeExec])
 
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.TestListenerBus.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def jobsOf(body: => Any): Int =
+    org.apache.spark.TestListenerBus.jobsOf(spark.sparkContext)(body)
 
   private def withoutBroadcast[T](s: SparkSession)(body: => T): T = {
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",

@@ -1230,6 +1230,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(causes(e).exists(_.isInstanceOf[DataCheckException]))
   }
 
+  test("a failing check submits the jobs of one evaluation of its query") {
+    import graft.model._
+    import org.apache.spark.TestListenerBus
+    val wh = java.nio.file.Files.createTempDirectory("graft-check-jobs").toString
+    val t = spark.range(0, 40).select((col("id") % 30).as("id"))
+    val unique = (df: org.apache.spark.sql.DataFrame) =>
+      DataChecks.uniqueCombination(df, Seq("id"))
+    val bad = Model("bad_jobs", Seq(), checks = Seq("unique_id" -> unique))(env => env("t"))
+    val sc = spark.sparkContext
+    val one = TestListenerBus.jobsOf(sc)(assert(unique(t).count() == 10))
+    var message = ""
+    // a View model runs no job of its own: every job is the check's
+    val jobs = TestListenerBus.jobsOf(sc) {
+      val e = intercept[Exception](new Runner(spark, Map("t" -> t), wh).build(Seq(bad)))
+      def causes(x: Throwable): Seq[Throwable] = if (x == null) Nil else x +: causes(x.getCause)
+      message = causes(e).collectFirst { case d: DataCheckException => d.getMessage }.get
+    }
+    assert(message == "model bad_jobs failed check 'unique_id': 10 violating rows")
+    assert(one > 0 && jobs == one, s"$jobs jobs, one evaluation runs $one")
+  }
+
   test("watermark drops late data in append-mode windows") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._

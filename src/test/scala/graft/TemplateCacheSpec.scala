@@ -1,23 +1,20 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Incremental
-import graft.plans.{ServedStatement, TemplateCache, TemplateHitExec}
+import graft.plans.{ServedStatement, TemplateCache}
 import graft.sql.BigQueryDialect
 
-/** The session's template cache: a repeated lookup template runs its
-  * retained RDD with the new key bound, one job, the same rows. A
-  * DataFrame lookup reaches it through its optimized plan, a SQL
-  * statement through its parse tree. */
+/** The session's template cache: a repeated SQL lookup template runs
+  * its retained RDD with the new key bound, one job, the same rows. A
+  * statement reaches it through its parse tree; a DataFrame query never
+  * does. */
 class TemplateCacheSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   private lazy val cache = TemplateCache.of(spark).get
@@ -66,7 +63,7 @@ class TemplateCacheSpec extends AnyFunSuite {
       s"AND $k + 9 QUALIFY row_number() OVER (PARTITION BY o_custkey " +
       "ORDER BY o_totalprice DESC, o_orderkey) = 1")
 
-  /** The same lookups as DataFrames, which only the plan key serves. */
+  /** The same lookups as DataFrames, which the cache never serves. */
   private def pointDf(k: Long) = spark.table("tc_orders").where(col("o_custkey") === k)
     .select("o_orderkey", "o_totalprice", "o_orderdate")
   private def historyDf(k: Long) = spark.table("tc_orders").where(col("o_custkey") === k)
@@ -77,16 +74,6 @@ class TemplateCacheSpec extends AnyFunSuite {
     .withColumn("__rn", row_number().over(Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
     .where(col("__rn") === 1).select("o_custkey", "o_orderkey", "o_totalprice")
-
-  /** Served by the plan key (a [[TemplateHitExec]] root) or the
-    * statement key. */
-  private def served(df: DataFrame): Boolean = {
-    def root(p: SparkPlan) = p.isInstanceOf[TemplateHitExec]
-    statementServed(df) || (df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => root(a.inputPlan)
-      case p => root(p)
-    })
-  }
 
   private def statementServed(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[ServedStatement]
@@ -102,19 +89,8 @@ class TemplateCacheSpec extends AnyFunSuite {
     }
   }
 
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.TestListenerBus.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def jobsOf(body: => Any): Int =
+    org.apache.spark.TestListenerBus.jobsOf(spark.sparkContext)(body)
 
   private def rows(s: SparkSession, sql: String): Seq[String] =
     s.sql(sql).collect().map(_.toString).toSeq
@@ -127,24 +103,16 @@ class TemplateCacheSpec extends AnyFunSuite {
     (r, cache.hits.get - before)
   }
 
-  test("for 20 keys of each lookup shape a hit returns the plain session's rows in one job") {
+  test("each DataFrame lookup shape, collected 3 times, builds nothing and returns the plain session's rows") {
     tables
     val shapes = Seq[(Long => DataFrame, Long => String)](
       (pointDf, point(_)), (historyDf, history(_)), (top1Df, top1(_)))
-    for ((shape, sqlOf) <- shapes) {
-      shape(3L).collect(); shape(3L).collect()
-      for (k <- 1L to 1981L by 104L) {
-        val df = shape(k)
-        val before = cache.hits.get
-        var got: Seq[String] = Nil
-        assert(jobsOf { got = df.collect().map(_.toString).toSeq } === 1, sqlOf(k))
-        assert(served(df) && !statementServed(df), sqlOf(k))
-        assert(cache.hits.get - before === 1, sqlOf(k))
-        assert(got.nonEmpty, sqlOf(k))
-        // same rows in the same order as the plain session's statement
-        assert(got === rows(plain, sqlOf(k)), sqlOf(k))
-      }
-    }
+    val (builds, hits, fingerprints) = (cache.builds.get, cache.hits.get, cache.fingerprints.get)
+    for ((shape, sqlOf) <- shapes; k <- Seq(3L, 3L, 104L))
+      assert(shape(k).collect().map(_.toString).toSeq === rows(plain, sqlOf(k)), sqlOf(k))
+    assert(cache.builds.get === builds)
+    assert(cache.hits.get === hits)
+    assert(cache.fingerprints.get === fingerprints)
   }
 
   test("for 20 Zipf keys of each lookup shape a served statement returns the plain session's rows in one job") {
@@ -156,10 +124,10 @@ class TemplateCacheSpec extends AnyFunSuite {
         val sql = shape(k)
         val df = spark.sql(sql)
         assert(statementServed(df), sql)
-        val before = cache.statementHits.get
+        val before = cache.hits.get
         var got: Seq[String] = Nil
         assert(jobsOf { got = df.collect().map(_.toString).toSeq } === 1, sql)
-        assert(cache.statementHits.get - before === 1, sql)
+        assert(cache.hits.get - before === 1, sql)
         assert(got.nonEmpty, sql)
         assert(got === rows(plain, sql), sql)
       }
@@ -287,23 +255,20 @@ class TemplateCacheSpec extends AnyFunSuite {
     for (sql <- queries; _ <- 1 to 3) {
       val df = spark.sql(sql)
       val got = df.collect().map(_.toString).toSeq
-      assert(!served(df), sql)
+      assert(!statementServed(df), sql)
       assert(got.sorted === rows(plain, sql).sorted, sql)
     }
     assert(cache.builds.get === builds)
     // a statement's second parse builds its template before the action
     // is known, so the repeated write statement (a shape no other test
-    // issues) builds one statement template; a write never builds a
-    // plan-key template and never runs a template
+    // issues) builds one template; a write never runs a template
     val write = "SELECT o_orderdate, o_orderkey FROM tc_orders WHERE o_custkey = 40"
-    val statementBuilds = cache.statementBuilds.get
     for (i <- 1 to 3) {
       spark.sql(write).write.parquet(s"$dir/written$i")
       assert(spark.read.parquet(s"$dir/written$i").collect().map(_.toString).toSeq.sorted ===
         rows(plain, write).sorted)
     }
-    assert(cache.builds.get - cache.statementBuilds.get === builds - statementBuilds)
-    assert(cache.statementBuilds.get - statementBuilds === 1)
+    assert(cache.builds.get - builds === 1)
     assert(cache.hits.get === hits)
   }
 
@@ -316,12 +281,12 @@ class TemplateCacheSpec extends AnyFunSuite {
     def sql(k: Long) =
       s"SELECT o_orderkey, abs(o_totalprice - 100) AS p FROM tc_orders WHERE o_custkey = $k"
     /** Rows of `sql(k)` in `s`, checked against the plain session, and
-      * whether the statement key served them. */
+      * whether the cache served them. */
     def check(k: Long): Boolean = {
-      val before = own.statementHits.get
+      val before = own.hits.get
       val got = s.sql(sql(k)).collect().map(_.toString).toSeq
       assert(got === rows(plain, sql(k)), sql(k))
-      own.statementHits.get - before == 1
+      own.hits.get - before == 1
     }
     try {
       check(1); check(2)
@@ -352,8 +317,8 @@ class TemplateCacheSpec extends AnyFunSuite {
     tables
     spark.read.parquet(s"$dir/orders").write.mode("overwrite").saveAsTable("tc_catalog_orders")
     try {
-      val builds = cache.statementBuilds.get
-      val hits = cache.statementHits.get
+      val builds = cache.builds.get
+      val hits = cache.hits.get
       val queries = Seq(
         "SELECT o_orderkey FROM tc_orders WHERE o_custkey = 5 AND o_orderdate < current_date()",
         "SELECT o_orderkey FROM tc_orders WHERE o_custkey = 5 AND rand(3) < 2.0",
@@ -365,8 +330,8 @@ class TemplateCacheSpec extends AnyFunSuite {
         val same = sql.replace("tc_catalog_orders", "tc_orders")
         assert(df.collect().map(_.toString).toSeq.sorted === rows(plain, same).sorted, sql)
       }
-      assert(cache.statementBuilds.get === builds)
-      assert(cache.statementHits.get === hits)
+      assert(cache.builds.get === builds)
+      assert(cache.hits.get === hits)
     } finally spark.sql("DROP TABLE IF EXISTS tc_catalog_orders")
   }
 
@@ -376,7 +341,7 @@ class TemplateCacheSpec extends AnyFunSuite {
       v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = $v",
       v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = ${v}L",
       v => s"SELECT o_orderkey, o_custkey FROM tc_orders WHERE o_custkey = $v.0")
-    val builds = cache.statementBuilds.get
+    val builds = cache.builds.get
     def servedRows(sql: String): Boolean = {
       val df = spark.sql(sql)
       assert(df.collect().map(_.toString).toSeq === rows(plain, sql), sql)
@@ -387,7 +352,7 @@ class TemplateCacheSpec extends AnyFunSuite {
       assert(!servedRows(sql("15")), sql("15"))
       assert(servedRows(sql("16")), sql("16"))
     }
-    assert(cache.statementBuilds.get - builds === 3)
+    assert(cache.builds.get - builds === 3)
     for (sql <- sqls) assert(servedRows(sql("17")), sql("17"))
   }
 
@@ -416,9 +381,9 @@ class TemplateCacheSpec extends AnyFunSuite {
     same(spark.read.parquet(s"$dir/served_written"), pa)
     // and the served statement itself still collects from its template
     val (c, pc) = both(41)
-    val before = cache.statementHits.get
+    val before = cache.hits.get
     same(c, pc)
-    assert(cache.statementHits.get - before === 1)
+    assert(cache.hits.get - before === 1)
   }
 
   test("a served statement reads the views of its parse, as an analyzed statement does") {
@@ -462,16 +427,16 @@ class TemplateCacheSpec extends AnyFunSuite {
     orders(5001, 10001).coalesce(1).write.parquet(s"$dir/cte_b")
     val sql = (k: Long) =>
       s"WITH c AS (SELECT * FROM tc_cte) SELECT o_orderkey, o_totalprice FROM c WHERE o_custkey = $k"
-    val hits = cache.statementHits.get
-    val builds = cache.statementBuilds.get
+    val hits = cache.hits.get
+    val builds = cache.builds.get
     for (path <- Seq("cte_a", "cte_b"); k <- 11L to 13L) {
       view("tc_cte", s"$dir/$path")
       val df = spark.sql(sql(k))
       assert(!statementServed(df), sql(k))
       assert(df.collect().map(_.toString).toSeq.sorted === rows(plain, sql(k)).sorted, sql(k))
     }
-    assert(cache.statementHits.get === hits)
-    assert(cache.statementBuilds.get === builds)
+    assert(cache.hits.get === hits)
+    assert(cache.builds.get === builds)
   }
 
   test("cache() of a served statement serves the same statement issued again") {
@@ -524,24 +489,22 @@ class TemplateCacheSpec extends AnyFunSuite {
       val changes = (1 to 5).map(i => (((b * 7 + i) % 60 + 1).toLong, (b * 100 + i).toLong,
         if (i == 5) "D" else "U", b + 1L)).toDF("k", "v", "op", "seq")
       Incremental.applyChangesGuarded(spark, changes, path, Seq("k"))
-      val f0 = cache.fingerprints.get
-      val live = Incremental.readCdcTable(spark, path)
+      for (s <- Seq(spark, plain)) Incremental.readCdcTable(s, path).createOrReplaceTempView("tc_cdc")
       val key = ((b * 7 + 1) % 60 + 1).toLong
-      val point = live.filter(col("k") === key).collect()
-      val agg = live.agg(count(lit(1)), coalesce(sum(col("v")), lit(0L))).collect()
+      val reads = Seq(s"SELECT k, v FROM tc_cdc WHERE k = $key",
+        "SELECT count(1) AS n, coalesce(sum(v), 0) AS s FROM tc_cdc")
+      val f0 = cache.fingerprints.get
+      val got = reads.map(rows(spark, _))
       lastReads = cache.fingerprints.get - f0
-      val truth = Incremental.readCdcTable(plain, path)
-      assert(point.map(_.toString).toSeq ===
-        truth.filter(col("k") === key).collect().map(_.toString).toSeq)
-      assert(agg.head.getLong(0) === truth.count())
+      assert(got === reads.map(rows(plain, _)))
     }
     assert(cache.builds.get === builds)
     assert(cache.volatiles.get - volatiles === 2)
     assert(lastReads === 0)
-    val stable = (k: Long) => spark.table("tc_orders").where(col("o_custkey") === k)
-      .select(col("o_orderkey"), (col("o_totalprice") * 3).as("p3"))
+    val stable = (k: Long) =>
+      s"SELECT o_orderkey, o_totalprice * 3 AS p3 FROM tc_orders WHERE o_custkey = $k"
     val hits = cache.hits.get
-    for (k <- 1L to 3L) assert(stable(k).collect().length === 10)
+    for (k <- 1L to 3L) assert(rows(spark, stable(k)) === rows(plain, stable(k)))
     assert(cache.builds.get - builds === 1)
     assert(cache.hits.get - hits === 2)
   }
