@@ -1,6 +1,5 @@
 package graft.model
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,40 +14,26 @@ import graft.sources.IO
   * Scale: both are implemented as key-partitioned merges — one shuffle
   * on the unique key, no driver-side state. At warehouse scale the
   * target would be an ACID table format; here the target is a parquet
-  * directory swapped atomically via rename.
+  * directory committed through [[IO.commit]] (staged, then swapped in).
   */
 object Incremental {
 
-  /** Stage `df` at `<path>__tmp`, then replace `path` with it. The
-    * live table is deleted only after the new one is fully written, and
-    * a refused rename fails loudly: the new table is left at the staged
-    * path rather than silently lost. */
-  private def swapWrite(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val tmp = path + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    IO.swapInto(spark, tmp, path)
-    // the schema just written, not a footer read back
-    spark.read.schema(df.schema).parquet(path)
-  }
+  /** The read-fold-commit step of every fold here: `fold` turns the
+    * existing table into the next one, `first` is the table of a first
+    * run; the result is committed through [[IO.commit]]. The existence
+    * check is [[IO.tableExists]], which fails loudly on a swap that
+    * stopped between its delete and its rename. */
+  private def foldInto(spark: SparkSession, path: String, first: => DataFrame)(
+      fold: DataFrame => DataFrame): DataFrame =
+    IO.commit(spark,
+      if (IO.tableExists(spark, path)) fold(IO.readParquet(spark, path)) else first, path)
 
-  /** Whether the table at `path` exists on its own file system. A
-    * missing `path` beside a complete staged copy (`<path>__tmp` or
-    * `<path>__staging` holding `_SUCCESS`) is a swap that stopped
-    * between its delete and its rename ([[IO.swapInto]]): taken for a
-    * first run, a fold would bootstrap a new table from its batch alone
-    * and lose every earlier row, so this fails naming both paths. */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) || {
-      Seq("__tmp", "__staging").map(s => new Path(path + s))
-        .find(s => fs.exists(new Path(s, "_SUCCESS")))
-        .foreach { s => throw new java.io.IOException(s"table $p is missing but a " +
-          s"complete staged copy is at $s: an earlier swap stopped between its delete " +
-          s"and its rename; move $s to $p to keep that copy, or delete it to start over") }
-      false
-    }
-  }
+  /** The key-replace step of [[merge]] and [[applyChanges]]: `existing`
+    * without the keys of `keysOf`, plus `rows` (batch wins). */
+  private def replaceKeys(existing: DataFrame, keysOf: DataFrame, rows: DataFrame,
+      uniqueKey: Seq[String]): DataFrame =
+    existing.join(keysOf.select(uniqueKey.map(col): _*).distinct(), uniqueKey, "left_anti")
+      .unionByName(rows, allowMissingColumns = true)
 
   /** dbt incremental with merge semantics: rows in `batch` replace
     * existing rows with the same `uniqueKey`; new keys append. First
@@ -77,21 +62,14 @@ object Incremental {
     require(Set("ignore", "fail", "append_new_columns",
         "sync_all_columns").contains(onSchemaChange),
       s"unsupported on_schema_change '$onSchemaChange'")
-    val exists = pathExists(spark, path)
-    val merged = if (!exists) batch else {
-      val existing = IO.readParquet(spark, path)
+    foldInto(spark, path, batch) { existing =>
       require(uniqueKey.forall(batch.columns.contains) &&
           uniqueKey.forall(existing.columns.contains),
         s"unique_key $uniqueKey must survive the schema change")
       val (keepExisting, keepBatch) =
         resolveSchemaChange(existing, batch, onSchemaChange, path)
-      val keyCols = uniqueKey.map(col)
-      // batch wins: anti-join existing against batch keys, then union
-      keepExisting
-        .join(batch.select(keyCols: _*).distinct(), uniqueKey, "left_anti")
-        .unionByName(keepBatch, allowMissingColumns = true)
+      replaceKeys(keepExisting, batch, keepBatch, uniqueKey)
     }
-    swapWrite(spark, merged, path)
   }
 
   /** Resolve the two sides of an incremental fold onto the
@@ -114,20 +92,24 @@ object Incremental {
     }
   }
 
-  /** The APPEND-strategy (no unique_key) fold when the batch schema
-    * drifted: same `on_schema_change` resolution as [[merge]], no key
-    * anti-join — a raw parquet append with a different column set
-    * would leave a directory whose schema depends on which file a
-    * reader samples, so the drifted batch folds through one
-    * swap-write instead. */
-  private[graft] def appendFold(spark: SparkSession, batch: DataFrame,
-      path: String, onSchemaChange: String): DataFrame = {
-    val existing = IO.readParquet(spark, path)
-    val (keepExisting, keepBatch) =
-      resolveSchemaChange(existing, batch, onSchemaChange, path)
-    swapWrite(spark,
-      keepExisting.unionByName(keepBatch, allowMissingColumns = true), path)
-  }
+  /** dbt's APPEND strategy (no unique_key): a first run commits the
+    * batch; a batch with the table's columns in the table's order is a
+    * plain parquet append of the batch. A drifted batch folds under the
+    * same `on_schema_change` resolution as [[merge]], with no key
+    * anti-join, through one commit: a raw parquet append with a
+    * different column set would leave a directory whose schema depends
+    * on which file a reader samples. */
+  private[graft] def append(spark: SparkSession, batch: DataFrame,
+      path: String, onSchemaChange: String): DataFrame =
+    if (IO.tableExists(spark, path) &&
+        IO.readParquet(spark, path).columns.toSeq == batch.columns.toSeq) {
+      batch.write.mode("append").parquet(path)
+      IO.readParquet(spark, path)
+    } else foldInto(spark, path, batch) { existing =>
+      val (keepExisting, keepBatch) =
+        resolveSchemaChange(existing, batch, onSchemaChange, path)
+      keepExisting.unionByName(keepBatch, allowMissingColumns = true)
+    }
 
   /** CDC apply (the "APPLY CHANGES" shape): fold an insert/update/
     * delete change stream into the keyed table at `path`. Within the
@@ -141,27 +123,23 @@ object Incremental {
     * Scale shape: one bounded per-key window over the batch (batch-
     * sized, not table-sized), one anti-join of the base against the
     * batch's key set (broadcastable — change batches are small
-    * relative to the table), one union, one swap-write. The base
-    * table is never shuffled.
+    * relative to the table), one union, one commit. The base
+    * table is never shuffled. A batch whose columns differ from the
+    * table's fails before anything is written.
     */
   def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
       uniqueKey: Seq[String], opCol: String = "op",
       seqCol: String = "seq"): DataFrame = {
-    val exists = pathExists(spark, path)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(uniqueKey.map(col): _*)
+    val w = Window.partitionBy(uniqueKey.map(col): _*)
       .orderBy(col(seqCol).desc, col(opCol))
     val latest = changes.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     val upserts = latest.filter(col(opCol) =!= "D")
       .drop(opCol, seqCol)
-    val next = if (!exists) upserts else {
-      val existing = IO.readParquet(spark, path)
-      existing.join(latest.select(uniqueKey.map(col): _*).distinct(),
-          uniqueKey, "left_anti")
-        .unionByName(upserts)
+    foldInto(spark, path, upserts) { existing =>
+      resolveSchemaChange(existing, upserts, "fail", path)
+      replaceKeys(existing, latest, upserts, uniqueKey)
     }
-    swapWrite(spark, next, path)
   }
 
   /** Cross-batch-safe CDC fold: like [[applyChanges]], but the applied
@@ -186,14 +164,14 @@ object Incremental {
     * table's (either way) throws before the swap, as `merge` does
     * under `on_schema_change='fail'`, and the table stays as it was.
     *
-    * Jobs: only the swap-write's — on an existing table AQE runs the
+    * Jobs: only the commit's — on an existing table AQE runs the
     * batch's exchange (shared by the window and the key join), the
     * base's exchange and the write as three jobs; when the base and
     * the batch each read as one partition (files of ~4 MB or less),
     * [[graft.plans.ElideSinglePartitionShuffles]] drops both exchanges
     * and the write is the fold's one job. No job resolves a
     * schema: the base read takes its from a footer on the driver
-    * ([[graft.sources.IO.readParquet]]) and the swap-write's re-read
+    * ([[graft.sources.IO.readParquet]]) and the commit's re-read
     * the schema it wrote, where a schema-less `spark.read.parquet`
     * would add one job each. */
   def applyChangesGuarded(spark: SparkSession, changes: DataFrame,
@@ -202,7 +180,6 @@ object Incremental {
     require(!changes.columns.contains("__seq") &&
         !changes.columns.contains("__deleted"),
       "__seq/__deleted are reserved bookkeeping columns of the guarded fold")
-    val exists = pathExists(spark, path)
     val w = Window.partitionBy(uniqueKey.map(col): _*)
       .orderBy(col(seqCol).desc, col(opCol))
     val incoming = changes.withColumn("__rn", row_number().over(w))
@@ -210,8 +187,7 @@ object Incremental {
       .withColumn("__deleted", col(opCol) === "D")
       .drop(opCol)
       .withColumnRenamed(seqCol, "__seq")
-    val next = if (!exists) incoming else {
-      val existing = IO.readParquet(spark, path)
+    foldInto(spark, path, incoming) { existing =>
       // a column on one side only would be dropped or null-filled by
       // the fold below: fail before anything is written (both column
       // lists are known on the driver, so the check runs no job)
@@ -242,7 +218,6 @@ object Incremental {
             .otherwise(col("__e")(c)).as(c)
         }: _*)
     }
-    swapWrite(spark, next, path)
   }
 
   /** Live view of an [[applyChangesGuarded]] table: tombstones and the
@@ -265,19 +240,18 @@ object Incremental {
     * parameter encodes, the same trade every log-compacted CDC store
     * (Kafka compact+delete, Delta VACUUM vs time travel) makes.
     *
-    * Scale shape: one filtered rewrite of the table through the staged
-    * swap (`__tmp` write first, then delete+rename — the original
-    * survives until the rewrite has fully succeeded). No shuffle at
-    * all: the filter is partition-local, so the write is the only job.
+    * Scale shape: one filtered rewrite of the table through
+    * [[IO.commit]] (the original survives until the rewrite has fully
+    * succeeded). No shuffle at all: the filter is partition-local, so
+    * the write is the only job.
     *
     * @return the compacted on-disk table (bookkeeping columns
     *   included, so callers can audit what was kept) */
   def compactGuarded(spark: SparkSession, path: String,
-      horizonSeq: Long): DataFrame = {
-    val t = IO.readParquet(spark, path)
-    swapWrite(spark, t.filter(!col("__deleted") ||
-      col("__seq") > lit(horizonSeq)), path)
-  }
+      horizonSeq: Long): DataFrame =
+    // no first run: a missing table fails as Spark's read of it does
+    foldInto(spark, path, IO.readParquet(spark, path))(
+      _.filter(!col("__deleted") || col("__seq") > lit(horizonSeq)))
 
   /** dbt incremental with insert_overwrite strategy: every partition
     * VALUE present in the batch is replaced wholesale; untouched
@@ -377,7 +351,6 @@ object Incremental {
       uniqueKey: Seq[String], asOf: java.sql.Timestamp,
       checkCols: Seq[String] = Seq.empty,
       invalidateHardDeletes: Boolean = true): DataFrame = {
-    val exists = pathExists(spark, path)
     require(checkCols.forall(current.columns.contains),
       s"check_cols ${checkCols.filterNot(current.columns.contains)} " +
         s"not in the snapshot select (${current.columns.toSeq})")
@@ -392,8 +365,7 @@ object Incremental {
       .withColumn("valid_from", lit(asOf))
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
-    val next = if (!exists) incoming else {
-      val prev = IO.readParquet(spark, path)
+    foldInto(spark, path, incoming) { prev =>
       val prevCurrent = prev.filter(col("is_current"))
       val prevClosed = prev.filter(!col("is_current"))
       val joined = prevCurrent.as("p").join(
@@ -416,7 +388,6 @@ object Incremental {
       val opening = incoming.join(openKeys, uniqueKey, "left_anti")
       prevClosed.unionByName(stillOpen).unionByName(closing).unionByName(opening)
     }
-    swapWrite(spark, next, path)
   }
 
   /** dbt snapshot with the TIMESTAMP strategy: a current row is
@@ -439,7 +410,7 @@ object Incremental {
     *
     * Scale shape: identical to [[snapshot]] — one keyed left join of
     * the current-version table against the batch, unions, one
-    * swap-write; closed history is never re-shuffled. */
+    * commit; closed history is never re-shuffled. */
   /** @param invalidateHardDeletes dbt's `invalidate_hard_deletes`:
     *   when true, a key ABSENT from the batch closes its current row
     *   at `asOf` — the RUN clock, since a hard delete carries no
@@ -449,13 +420,11 @@ object Incremental {
       path: String, uniqueKey: Seq[String], updatedAt: String,
       asOf: java.sql.Timestamp,
       invalidateHardDeletes: Boolean = false): DataFrame = {
-    val exists = pathExists(spark, path)
     val incoming = current
       .withColumn("valid_from", col(updatedAt).cast("timestamp"))
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("is_current", lit(true))
-    val next = if (!exists) incoming else {
-      val prev = IO.readParquet(spark, path)
+    foldInto(spark, path, incoming) { prev =>
       val prevCurrent = prev.filter(col("is_current"))
       val prevClosed = prev.filter(!col("is_current"))
       val joined = prevCurrent.as("p").join(
@@ -490,7 +459,6 @@ object Incremental {
         prevClosed.unionByName(stillOpen).unionByName(closing)
           .unionByName(opening))(_ unionByName _)
     }
-    swapWrite(spark, next, path)
   }
 
   /** Incremental AGGREGATE refresh — the materialized-metrics-rollup
@@ -518,7 +486,7 @@ object Incremental {
     *
     * Scale shape: one batch-sized partial aggregate (map-side combine
     * to ≤ |keys| rows), one state-sized union+re-aggregate, two
-    * swap-writes. The history is never re-read.
+    * commits. The history is never re-read.
     *
     * @param valueMicro scaled-integer measure column (the sumCents
     *   discipline — raw-double sums are order-sensitive)
@@ -532,21 +500,20 @@ object Incremental {
       distinctKey: org.apache.spark.sql.Column, m: Int = 256): DataFrame = {
     val scalarsPath = path + "/scalars"
     val regsPath = path + "/regs"
-    val haveScalars = pathExists(spark, scalarsPath)
-    val haveRegs = pathExists(spark, regsPath)
+    val haveScalars = IO.tableExists(spark, scalarsPath)
+    val haveRegs = IO.tableExists(spark, regsPath)
     // the two state tables advance together; half-present state means
-    // a fold died between its swap-writes — refuse to fold on top of
+    // a fold died between its commits — refuse to fold on top of
     // it (re-bootstrapping or restoring is a caller decision). This
     // library's parquet-directory state is single-writer; a
     // transactional table format supplies the multi-writer/crash
     // atomicity story in production, as everywhere else in this file.
     require(haveScalars == haveRegs,
       s"aggRefresh state desync at $path: scalars=$haveScalars regs=$haveRegs " +
-        "— a previous fold failed between swap-writes; rebuild the rollup")
-    val exists = haveScalars
+        "— a previous fold failed between commits; rebuild the rollup")
 
     // one materialized pass over the batch feeds BOTH aggregates
-    // (otherwise each swap-write sink re-scans the raw batch)
+    // (otherwise each commit re-scans the raw batch)
     val proj = batch
       .select(col(key), valueMicro.cast("long").as("__v"),
         distinctKey.as("__dk"))
@@ -556,21 +523,15 @@ object Incremental {
       .groupBy(col(key))
       .agg(count(lit(1)).as("cnt"), sum(col("__v")).as("sum_micro"),
         min(col("__v")).as("min_micro"), max(col("__v")).as("max_micro"))
-    val mergedScalars =
-      if (!exists) partial
-      else IO.readParquet(spark, scalarsPath).unionByName(partial)
-        .groupBy(col(key))
-        .agg(sum(col("cnt")).as("cnt"), sum(col("sum_micro")).as("sum_micro"),
-          min(col("min_micro")).as("min_micro"), max(col("max_micro")).as("max_micro"))
-    val scalars = swapWrite(spark, mergedScalars, scalarsPath)
+    val scalars = foldInto(spark, scalarsPath, partial)(_.unionByName(partial)
+      .groupBy(col(key))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_micro")).as("sum_micro"),
+        min(col("min_micro")).as("min_micro"), max(col("max_micro")).as("max_micro")))
 
     val partialRegs = graft.ext.Sketches.hllRegisters(
       proj.select(col(key), col("__dk")), key, "__dk", m)
-    val mergedRegs =
-      if (!exists) partialRegs
-      else IO.readParquet(spark, regsPath).unionByName(partialRegs)
-        .groupBy(col(key), col("reg")).agg(max(col("mj")).as("mj"))
-    val regs = swapWrite(spark, mergedRegs, regsPath)
+    val regs = foldInto(spark, regsPath, partialRegs)(_.unionByName(partialRegs)
+      .groupBy(col(key), col("reg")).agg(max(col("mj")).as("mj")))
     // both states are on disk — the staged batch is dead
     graft.ext.Checkpoints.release(proj)
 

@@ -254,34 +254,15 @@ final class Runner(
       case Materialization.View =>
         df.createOrReplaceTempView(m.name)
         m.name -> df
-      case Materialization.Table =>
+      case mat =>
         val path = s"$warehouseDir/${m.name}"
-        df.write.mode("overwrite").parquet(path)
-        val reread = IO.readParquet(spark, path)
-        reread.createOrReplaceTempView(m.name)
-        m.name -> reread
-      case Materialization.Incremental(uniqueKey, onSchemaChange) =>
-        val path = s"$warehouseDir/${m.name}"
-        val reread =
-          if (uniqueKey.nonEmpty)
-            // merge bootstraps the first run itself
+        val reread = mat match {
+          case Materialization.Incremental(Seq(), onSchemaChange) =>
+            Incremental.append(spark, df, path, onSchemaChange)
+          case Materialization.Incremental(uniqueKey, onSchemaChange) =>
             Incremental.merge(spark, df, path, uniqueKey, onSchemaChange)
-          else {
-            val p = new org.apache.hadoop.fs.Path(path)
-            val exists =
-              p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-            if (!exists) {
-              df.write.mode("overwrite").parquet(path)
-              IO.readParquet(spark, path)
-            } else if (IO.readParquet(spark, path).columns.toSeq ==
-                df.columns.toSeq) {
-              df.write.mode("append").parquet(path)
-              IO.readParquet(spark, path)
-            } else
-              // schema drifted on the APPEND strategy: fold under
-              // the same on_schema_change policy as merge
-              Incremental.appendFold(spark, df, path, onSchemaChange)
-          }
+          case _ => IO.commit(spark, df, path)
+        }
         reread.createOrReplaceTempView(m.name)
         m.name -> reread
     }
@@ -296,26 +277,40 @@ final class Runner(
           s"model ${m.name} failed check '$checkName': $n violating rows", m.name)
     }
 
-  /** Run all models in dependency order; returns name -> result
-    * DataFrame (for Table materializations, the re-read parquet). */
-  def run(models: Seq[Model], runChecks: Boolean = false): Map[String, DataFrame] = {
+  /** The DAG loop of [[run]] and [[buildGated]]: each model starts once
+    * its deps have succeeded (a failed dep fails it with the same
+    * exception), on at most `threads` threads; with `runChecks` its data
+    * checks run before any dependent starts. Returns once every model
+    * has finished, each model's outcome in topological order, and the
+    * frame of every model that materialized. */
+  private def schedule(models: Seq[Model], runChecks: Boolean)
+      : (Seq[(Model, scala.util.Try[(String, DataFrame)])], Map[String, DataFrame]) = {
     val order = ModelGraph.topoSort(models)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val done = mutable.Map.empty[String, Future[(String, DataFrame)]]
+    val frames = new scala.collection.concurrent.TrieMap[String, DataFrame]
     try {
-    for (m <- order) {
-      val depFutures = m.deps.flatMap(done.get)
-      done(m.name) = Future.sequence(depFutures).map { resolved =>
-        val out = materialize(m, sources ++ resolved.toMap)
-        if (runChecks) runChecksOf(m, out._2)
-        out
+      for (m <- order) {
+        val depFutures = m.deps.flatMap(done.get)
+        done(m.name) = Future.sequence(depFutures).map { resolved =>
+          val out = materialize(m, sources ++ resolved.toMap)
+          frames(m.name) = out._2
+          if (runChecks) runChecksOf(m, out._2)
+          out
+        }
       }
-    }
-    val res = Await.result(Future.sequence(order.map(m => done(m.name))), Duration.Inf)
-    res.toMap
+      (order.map(m => m -> Await.ready(done(m.name), Duration.Inf).value.get),
+        frames.toMap)
     } finally pool.shutdown()
   }
+
+  /** Run all models in dependency order; returns name -> result
+    * DataFrame (for Table materializations, the re-read parquet). A
+    * failure aborts its dependents; once every independent branch has
+    * finished, the first failure in topological order is thrown. */
+  def run(models: Seq[Model], runChecks: Boolean = false): Map[String, DataFrame] =
+    schedule(models, runChecks)._1.map(_._2.get).toMap
 
   /** REAL `dbt build` semantics: each model's data checks run
     * immediately after it materializes and BEFORE any dependent
@@ -331,36 +326,17 @@ final class Runner(
     *         `success`, `fail: <detail>`, or `skipped: ...`) */
   def buildGated(models: Seq[Model])
       : (Map[String, DataFrame], Map[String, String]) = {
-    val order = ModelGraph.topoSort(models)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // gate futures FAIL on a check failure (closing dependents); the
-    // materialized frame is still recorded for the caller
-    val done = mutable.Map.empty[String, Future[(String, DataFrame)]]
-    val frames = new scala.collection.concurrent.TrieMap[String, DataFrame]
-    try {
-      for (m <- order) {
-        val depFutures = m.deps.flatMap(done.get)
-        done(m.name) = Future.sequence(depFutures).map { resolved =>
-          val out = materialize(m, sources ++ resolved.toMap)
-          frames(m.name) = out._2
-          runChecksOf(m, out._2)
-          out
-        }
-      }
-      val status = order.map { m =>
-        val f = done(m.name)
-        Await.ready(f, Duration.Inf)
-        m.name -> (f.value.get match {
-          case scala.util.Success(_) => "success"
-          case scala.util.Failure(d: DataCheckException) =>
-            if (d.model == m.name) s"fail: ${d.getMessage}"
-            else s"skipped: upstream ${d.model} failed a data test"
-          case scala.util.Failure(other) => throw other
-        })
-      }.toMap
-      (frames.toMap, status)
-    } finally pool.shutdown()
+    val (outcomes, frames) = schedule(models, runChecks = true)
+    val status = outcomes.map { case (m, outcome) =>
+      m.name -> (outcome match {
+        case scala.util.Success(_) => "success"
+        case scala.util.Failure(d: DataCheckException) =>
+          if (d.model == m.name) s"fail: ${d.getMessage}"
+          else s"skipped: upstream ${d.model} failed a data test"
+        case scala.util.Failure(other) => throw other
+      })
+    }.toMap
+    (frames, status)
   }
 }
 

@@ -39,9 +39,9 @@ private[operators] object HashIndexWriter {
     * THE maintenance debt of the build-once/probe-many layout. Rewrite
     * the table through a STAGING table with the SAME bucket spec (read
     * back from the catalog, never the session width), then swap
-    * delete+rename — the [[graft.model.Incremental]] swapWrite
-    * discipline: the original files stay on disk (and readable through
-    * the catalog entry) until the full compacted copy is durably
+    * delete+rename — the [[graft.sources.IO.commit]] discipline: the
+    * original files stay on disk (and readable through the catalog
+    * entry) until the full compacted copy is durably
     * written, so a mid-rewrite executor loss or write failure leaves
     * the index intact. Result: one file per bucket again, identical
     * rows, identical shuffle-free probe plan. Run on the same cadence

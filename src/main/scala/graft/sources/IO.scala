@@ -47,6 +47,40 @@ object IO {
       case None => spark.read.parquet(path)
     }
 
+  /** The one way graft replaces a table: write `df` completely at
+    * `<path>__staging`, then swap it in through [[swapInto]], so the
+    * live table is deleted only after the new one is fully written; a
+    * write that fails leaves the previous table untouched. `partitionCols`
+    * keeps a Hive layout. Returns the committed table, read with the
+    * schema just written rather than a footer read back. */
+  private[graft] def commit(spark: SparkSession, df: DataFrame, path: String,
+      partitionCols: Seq[String] = Nil): DataFrame = {
+    val staged = path + "__staging"
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(staged)
+    swapInto(spark, staged, path)
+    spark.read.schema(df.schema).parquet(path)
+  }
+
+  /** Whether a table is at `path` on its own file system. A missing
+    * `path` beside a complete staged copy (`<path>__staging`, or the
+    * `<path>__tmp` of earlier releases, holding `_SUCCESS`) is a swap
+    * that stopped between its delete and its rename: taken for a first
+    * run, a fold would bootstrap a new table from its batch alone and
+    * lose every earlier row, so this fails naming both paths. */
+  private[graft] def tableExists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) || {
+      Seq("__staging", "__tmp").map(s => new Path(path + s))
+        .find(s => fs.exists(new Path(s, "_SUCCESS")))
+        .foreach { s => throw new java.io.IOException(s"table $p is missing but a " +
+          s"complete staged copy is at $s: an earlier swap stopped between its delete " +
+          s"and its rename; move $s to $p to keep that copy, or delete it to start over") }
+      false
+    }
+  }
+
   /** Replace the directory at `path` with the fully written one at
     * `staged`, on `path`'s own file system: exactly one recursive delete
     * of the live copy, then one rename. Neither step is atomic with the
@@ -181,12 +215,11 @@ object IO {
     * (right for the many-small-partitions case; a jumbo partition
     * stays one file — split those by bucketing instead).
     *
-    * Swap discipline: the rewrite lands at `<path>__staging` and
-    * only replaces the original after success, through [[swapInto]]
-    * (the swap `Incremental` and the hash-index compaction use too) —
-    * a rename, atomic on HDFS/local, NOT on object stores (there, compact into a
-    * table format's transaction log instead; this operator is the raw-
-    * parquet fallback).
+    * The rewrite is committed through [[commit]]: it lands at
+    * `<path>__staging` and replaces the original only after success —
+    * a rename, atomic on HDFS/local, NOT on object stores (there, compact
+    * into a table format's transaction log instead; this operator is the
+    * raw-parquet fallback).
     *
     * @return (filesBefore, filesAfter) data-file counts. */
   def compact(spark: SparkSession, path: String,
@@ -208,15 +241,10 @@ object IO {
     val before = dataFiles(p)
     val n = math.max(1,
       math.ceil(before.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val staged = path + "__staging"
     val src = readParquet(spark, path)
-    val w =
-      if (partitionCols.nonEmpty)
-        src.repartition(partitionCols.map(col): _*)
-          .write.partitionBy(partitionCols: _*)
-      else src.repartition(n).write
-    w.mode(SaveMode.Overwrite).parquet(staged)
-    swapInto(spark, staged, path)
+    commit(spark,
+      if (partitionCols.nonEmpty) src.repartition(partitionCols.map(col): _*)
+      else src.repartition(n), path, partitionCols)
     (before.size, dataFiles(p).size)
   }
 }

@@ -2179,8 +2179,7 @@ object DbtProject {
                 .exists(_.trim.toBoolean)) {
               val path = s"$warehouseDir/dbt_test__audit/" +
                 DbtTests.auditName(name, "singular")
-              vr.write.mode("overwrite").parquet(path)
-              IO.readParquet(spark, path).count()
+              IO.commit(spark, vr, path).count()
             } else vr.count()
             (name, "test", DbtTests.statusOf(n, r.config),
               s"$n violating rows")

@@ -121,8 +121,7 @@ final class DbtSqlEngine(spark: SparkSession, warehouseDir: String,
             if (t.config.get("store_failures").exists(_.trim.toBoolean)) {
               val path = s"$warehouseDir/dbt_test__audit/" +
                 DbtTests.auditName(m.name, label)
-              vr.write.mode("overwrite").parquet(path)
-              IO.readParquet(spark, path).count()
+              IO.commit(spark, vr, path).count()
             } else vr.count()
           val st = DbtTests.statusOf(n, t.config)
           testLog((m.name, label)) = (n, st)
@@ -328,11 +327,10 @@ final class DbtSqlEngine(spark: SparkSession, warehouseDir: String,
           case Some("false") => false
           case _ => fullRefresh
         }
-      if (modelFullRefresh && mat.isInstanceOf[Materialization.Incremental]
-          && fs.exists(targetPath))
+      if (modelFullRefresh && mat.isInstanceOf[Materialization.Incremental])
         fs.delete(targetPath, true)
       val incrementalRun = mat.isInstanceOf[Materialization.Incremental] &&
-        fs.exists(targetPath)
+        IO.tableExists(spark, targetPath.toString)
       val rr = if (incrementalRun) r.render(true) else first
       // splice the needed ephemeral bodies (dependencies first) as
       // __dbt__cte__ CTEs, then translate the COMBINED text — the

@@ -134,10 +134,17 @@ object StreamingOps {
     * holds the latest row per key. */
   def upsertSink(stream: DataFrame, path: String, uniqueKey: Seq[String],
       queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
+    foldEachBatch(stream, queryName)(
+      graft.model.Incremental.merge(_, _, path, uniqueKey))
+
+  /** The foreachBatch body of the table sinks: every non-empty
+    * micro-batch goes through `fold` (the batch's session, the batch). */
+  private def foldEachBatch(stream: DataFrame, queryName: String)(
+      fold: (SparkSession, DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.model.Incremental.merge(batch.sparkSession, batch.toDF(), path, uniqueKey): Unit
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        if (!batch.isEmpty) fold(batch.sparkSession, batch.toDF()): Unit
       }
       .start()
 
@@ -152,13 +159,8 @@ object StreamingOps {
   def cdcSink(changes: DataFrame, path: String, uniqueKey: Seq[String],
       queryName: String, opCol: String = "op", seqCol: String = "seq")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.model.Incremental.applyChanges(batch.sparkSession,
-            batch.toDF(), path, uniqueKey, opCol, seqCol): Unit
-      }
-      .start()
+    foldEachBatch(changes, queryName)(
+      graft.model.Incremental.applyChanges(_, _, path, uniqueKey, opCol, seqCol))
 
   /** Cross-batch-safe streaming CDC sink: folds through
     * [[graft.model.Incremental.applyChangesGuarded]], so out-of-order
@@ -170,13 +172,8 @@ object StreamingOps {
   def cdcSinkGuarded(changes: DataFrame, path: String, uniqueKey: Seq[String],
       queryName: String, opCol: String = "op", seqCol: String = "seq")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream.queryName(queryName)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.model.Incremental.applyChangesGuarded(batch.sparkSession,
-            batch.toDF(), path, uniqueKey, opCol, seqCol): Unit
-      }
-      .start()
+    foldEachBatch(changes, queryName)(
+      graft.model.Incremental.applyChangesGuarded(_, _, path, uniqueKey, opCol, seqCol))
 
   /** Streaming curation gate: the batch TextAnalysis stats/quality
     * expressions applied unchanged to a document STREAM — entirely

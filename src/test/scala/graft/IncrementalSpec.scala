@@ -251,21 +251,24 @@ class IncrementalSpec extends AnyFunSuite {
     assert(live(fast).map(_.getLong(0)) === (1L to 20L).filterNot(_ == 4L) :+ 30L)
   }
 
+  /** Runs `body` with every `file:` path resolved, uncached, to the
+    * file system that refuses to rename a staged copy. */
+  private def refusingRenames[T](body: => T): T = {
+    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("swap-write: a refused rename fails loudly, naming both paths; the new table survives staged") {
     val path = tmp("graft-swap-refused")
     Incremental.applyChangesGuarded(spark,
       Seq((1L, "a", "I", 1L)).toDF("k", "v", "op", "seq"), path, Seq("k"))
-    // resolved per path under the session's conf, uncached, so the
-    // refusing file system serves exactly this fold
-    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val e = try intercept[java.io.IOException](Incremental.applyChangesGuarded(spark,
-        Seq((2L, "b", "I", 2L)).toDF("k", "v", "op", "seq"), path, Seq("k")))
-      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    assert(e.getMessage.contains(s"${path}__tmp") && e.getMessage.contains(s"to $path"),
+    val e = intercept[java.io.IOException](refusingRenames(Incremental.applyChangesGuarded(
+      spark, Seq((2L, "b", "I", 2L)).toDF("k", "v", "op", "seq"), path, Seq("k"))))
+    assert(e.getMessage.contains(s"${path}__staging") && e.getMessage.contains(s"to $path"),
       e.getMessage)
-    assert(spark.read.parquet(path + "__tmp").select("k").as[Long].collect().sorted
+    assert(spark.read.parquet(path + "__staging").select("k").as[Long].collect().sorted
       .toSeq === Seq(1L, 2L))
   }
 
@@ -275,35 +278,73 @@ class IncrementalSpec extends AnyFunSuite {
     Incremental.applyChangesGuarded(spark, batch(1L, 1L), path, Seq("k"))
     Incremental.applyChangesGuarded(spark, batch(2L, 2L), path, Seq("k"))
     // a swap that stopped after its delete: the live table is gone and
-    // the complete new one is at __tmp
-    val confs = Seq("fs.file.impl" -> classOf[RenameRefusingFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try intercept[java.io.IOException](
-      Incremental.applyChangesGuarded(spark, batch(3L, 3L), path, Seq("k")))
-    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    // the complete new one is at __staging
+    intercept[java.io.IOException](refusingRenames(
+      Incremental.applyChangesGuarded(spark, batch(3L, 3L), path, Seq("k"))))
     assert(!new java.io.File(path).exists())
     def staged(s: String) = spark.read.parquet(path + s).select("k").as[Long].collect().sorted.toSeq
     // the next fold used to bootstrap a new table from its batch alone
     val e = intercept[java.io.IOException](
       Incremental.applyChangesGuarded(spark, batch(4L, 4L), path, Seq("k")))
     assert(e.getMessage.contains(s"table $path is missing") &&
-      e.getMessage.contains(s"${path}__tmp"), e.getMessage)
+      e.getMessage.contains(s"${path}__staging"), e.getMessage)
     assert(!new java.io.File(path).exists())
-    assert(staged("__tmp") === Seq(1L, 2L, 3L))
-    // a compaction's __staging copy is guarded the same way, in every fold
-    assert(new java.io.File(path + "__tmp").renameTo(new java.io.File(path + "__staging")))
+    assert(staged("__staging") === Seq(1L, 2L, 3L))
+    // an earlier release's __tmp copy is guarded the same way, in every fold
+    assert(new java.io.File(path + "__staging").renameTo(new java.io.File(path + "__tmp")))
     val e2 = intercept[java.io.IOException](Incremental.applyChanges(spark,
       batch(4L, 4L), path, Seq("k")))
-    assert(e2.getMessage.contains(s"${path}__staging"), e2.getMessage)
+    assert(e2.getMessage.contains(s"${path}__tmp"), e2.getMessage)
     intercept[java.io.IOException](Incremental.merge(spark,
       Seq((4L, "v4")).toDF("k", "v"), path, Seq("k")))
-    assert(staged("__staging") === Seq(1L, 2L, 3L))
+    assert(staged("__tmp") === Seq(1L, 2L, 3L))
     // an incomplete staged copy (no _SUCCESS) is no table: a first run
-    assert(new java.io.File(path + "__staging/_SUCCESS").delete())
+    assert(new java.io.File(path + "__tmp/_SUCCESS").delete())
     Incremental.applyChangesGuarded(spark, batch(5L, 5L), path, Seq("k"))
     assert(Incremental.readCdcTable(spark, path).select("k").as[Long].collect().toSeq ===
       Seq(5L))
+  }
+
+  test("append-strategy model: a run after a swap stopped between delete and rename fails loudly, the staged copy intact") {
+    import graft.model.{Materialization, Model, Runner}
+    val wh = java.nio.file.Files.createTempDirectory("graft-append-recovery").toString
+    val path = s"$wh/events"
+    def model(batch: org.apache.spark.sql.DataFrame) =
+      Model("events", Seq(), Materialization.Incremental())(_ => batch)
+    def run(batch: org.apache.spark.sql.DataFrame) =
+      new Runner(spark, Map.empty, wh).run(Seq(model(batch)))("events")
+    run(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    run(Seq((3L, "c")).toDF("k", "v"))
+    // a drifted batch folds through a swap; this one stops after its delete
+    intercept[java.io.IOException](refusingRenames(run(Seq((4L, "d", 1)).toDF("k", "v", "w"))))
+    assert(!new java.io.File(path).exists())
+    def staged = spark.read.parquet(path + "__staging").select("k").as[Long].collect().sorted.toSeq
+    assert(staged === Seq(1L, 2L, 3L, 4L))
+    // the next run used to bootstrap a new table from its batch alone
+    val e = intercept[java.io.IOException](run(Seq((5L, "e")).toDF("k", "v")))
+    assert(e.getMessage.contains(s"table $path is missing") &&
+      e.getMessage.contains(s"${path}__staging"), e.getMessage)
+    assert(!new java.io.File(path).exists())
+    assert(staged === Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("table model: a rebuild whose transform fails at run time leaves the previous table readable") {
+    import graft.model.{Materialization, Model, Runner}
+    val wh = java.nio.file.Files.createTempDirectory("graft-table-rebuild").toString
+    // a range, not a local relation the optimizer would evaluate itself
+    val src = Map("t" -> spark.range(1, 3).select(col("id").as("k"),
+      concat(lit("v"), col("id")).as("v")))
+    def build(transform: Map[String, org.apache.spark.sql.DataFrame] =>
+        org.apache.spark.sql.DataFrame) =
+      new Runner(spark, src, wh).run(Seq(Model("mart", Seq("t"), Materialization.Table)(transform)))
+    build(env => env("t"))
+    def table = spark.read.parquet(s"$wh/mart").as[(Long, String)].collect().sorted.toSeq
+    assert(table === Seq((1L, "v1"), (2L, "v2")))
+    val e = intercept[Exception](build(env => env("t").select(col("k"),
+      when(col("k") > 1, raise_error(lit("bad row"))).otherwise(col("v")).as("v"))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("bad row")), e)
+    assert(table === Seq((1L, "v1"), (2L, "v2")))
   }
 
   test("guarded CDC fold: schema drift either way fails loudly and leaves the table as it was") {
@@ -321,7 +362,7 @@ class IncrementalSpec extends AnyFunSuite {
       Seq((2L, "b", 20, 2.5, "I", 2L)).toDF("k", "v", "w", "x", "op", "seq"), path, Seq("k")))
     assert(adds.getMessage.contains("adds [x]"), adds.getMessage)
     assert(live === before)
-    assert(!new java.io.File(path + "__tmp").exists())
+    assert(!new java.io.File(path + "__staging").exists())
     // the same columns in another order still fold
     Incremental.applyChangesGuarded(spark,
       Seq((2L, 2L, "I", 20, "b")).toDF("seq", "k", "op", "w", "v"), path, Seq("k"))
@@ -395,11 +436,10 @@ class IncrementalSpec extends AnyFunSuite {
 
 }
 
-/** Refuses (returns false for) renames of a staged copy: a swap-write's
-  * `__tmp` table or a hash-index compaction's `__staging` directory. */
+/** Refuses (returns false for) renames of a staged copy: a table
+  * commit's or a hash-index compaction's `__staging` directory. */
 class RenameRefusingFileSystem extends graft.sources.NioLocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    !Seq("__tmp", "__staging").exists(src.getName.endsWith) &&
-      super.rename(src, dst)
+    !src.getName.endsWith("__staging") && super.rename(src, dst)
 }

@@ -2,13 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Incremental
-import graft.plans.{ServedStatement, TemplateCache}
+import graft.plans.{ServedStatement, ServedStatementExec, TemplateCache}
 import graft.sql.BigQueryDialect
 
 /** The session's template cache: a repeated SQL lookup template runs
@@ -138,28 +137,23 @@ class TemplateCacheSpec extends AnyFunSuite {
     tables
     val sql = (k: Long) => history(k, "tc_orders")
     rows(spark, sql(3L)); rows(spark, sql(4L))
-    def ms(body: => Any): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e6
-    }
-    /** Analysis (its tracker phase, which ran inside spark.sql, in whole
-      * ms), optimization and planning of `sql(k)` in `s`. */
-    def phases(s: SparkSession, k: Long): Seq[Double] = {
+    /** `sql(k)` planned in `s`: the rule invocations of its analysis and
+      * optimization that changed the plan, its physical plan, and
+      * whether the cache served it. */
+    def planned(s: SparkSession, k: Long) = {
       val df = s.sql(sql(k))
-      assert(statementServed(df) === (s eq spark), sql(k))
       val qe = df.queryExecution
-      val analysis = qe.tracker.phases(QueryPlanningTracker.ANALYSIS).durationMs.toDouble
-      Seq(analysis, ms(qe.optimizedPlan), ms(qe.executedPlan))
+      val physical = qe.executedPlan
+      (qe.tracker.rules.values.map(_.numEffectiveInvocations).sum, physical, statementServed(df))
     }
-    // the first runs warm up the JIT; the lower quartile of the last
-    // 100, which other test JVMs' load inflates least
-    def quartiles(s: SparkSession) = (1L to 300L).map(phases(s, _)).drop(200).transpose
-      .map(t => t.sorted.apply(t.size / 4))
-    val served = quartiles(spark)
-    val unserved = quartiles(plain)
-    // the optimizer still runs its ~200 rule invocations over the leaf
-    assert(served.forall(_ < 1.0), s"served $served ms, without the cache $unserved ms")
+    for (k <- Seq(5L, 104L, 1999L)) {
+      val (effective, physical, served) = planned(spark, k)
+      assert(effective === 0, sql(k))
+      assert(physical.isInstanceOf[ServedStatementExec], s"${sql(k)}\n$physical")
+      val (plainEffective, _, plainServed) = planned(plain, k)
+      assert(plainEffective > 0, sql(k))
+      assert(served && !plainServed, sql(k))
+    }
   }
 
   test("each session has a cache of its own, and a session without GraftExtensions none") {
